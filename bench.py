@@ -698,7 +698,7 @@ def run_scale_job(cores: int, rows: int) -> None:
     from pyspark.sql import functions as F
 
     from web_crawler_spark.core import imagecodec, phash as ph
-    from web_crawler_spark.functions.udfs import canon_udf, caption_bands_udf, host_udf
+    from web_crawler_spark.functions.udfs import caption_bands_udf, url_parts_udf
     from web_crawler_spark.session import get_spark
 
     spark = get_spark(app=f"wcs-scale-{cores}", cores=cores,
@@ -730,8 +730,8 @@ def run_scale_job(cores: int, rows: int) -> None:
                      F.lit("#frag")).alias("url"),
         )
         canon = (
-            base.withColumn("canon_url", canon_udf("url"))
-            .withColumn("host", host_udf("canon_url"))
+            base.select("id", "url", url_parts_udf("url").alias("u"))
+            .select("id", "url", "u.canon_url", "u.host")
             .withColumn("url_hash", F.xxhash64("canon_url"))
             .withColumn("salt", F.pmod(F.xxhash64("canon_url"), F.lit(16)))
             .withColumn("bucket", F.pmod(F.xxhash64("host", "salt"), F.lit(128)).cast("int"))

@@ -79,6 +79,19 @@ def test_resume_equals_uninterrupted(spark, fix_dir, tmp_path_factory, engine_an
     run_dir = str(tmp_path_factory.mktemp("resume"))
     e1 = CrawlEngine(spark, fix_dir, run_dir, CrawlConfig(per_host_k=2, max_rounds=2))
     e1.run()
+    # resume builds on init_state's snapshot (round -1): its next_seq is
+    # the frontier's row count, and the tables it writes empty on the
+    # driver read back with their declared schemas
+    init = e1.cat.history()[0]
+    assert init["round"] == -1
+    assert init["counters"]["next_seq"] == e1.cat.read_at("frontier", -1).count()
+    for name in ("host_next", "survivors", "bands", "crawl_log", "metrics"):
+        df = e1.cat.read_at(name, -1)
+        assert df.count() == 0, name
+        footer = spark.read.parquet(*df.inputFiles()).schema  # no declared schema
+        declared = e1.cat.table_schemas[name]
+        assert ([(f.name, f.dataType) for f in footer]
+                == [(f.name, f.dataType) for f in declared]), name
     e2 = CrawlEngine(spark, fix_dir, run_dir, CFG)  # resumes rounds 2..3
     e2.run()
     a = eng_full.cat.read("crawl_log").orderBy("fetch_seq").toPandas()

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_crawler_spark.plans import pipeline_ops as P
+from web_crawler_spark.session import plan_truncated
 
 SF = "/root/testdata/sf0.001"
 
@@ -114,4 +115,5 @@ def test_balanced_sample_exact_k_and_deterministic(spark):
 def test_balanced_sample_plan_uses_window_group_limit(spark):
     d = P._docs(spark, SF).select("doc_id", "lang")
     plan = P.balanced_sample_df(d, "lang", 5)._jdf.queryExecution().executedPlan().toString()
+    assert not plan_truncated(plan)
     assert "WindowGroupLimit" in plan

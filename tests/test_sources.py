@@ -39,11 +39,11 @@ def test_fakeweb_feeds_engine_url_shape(fakeweb):
     pipeline (the S3 fetch-source contract)."""
     from pyspark.sql import functions as F
 
-    from web_crawler_spark.functions.udfs import canon_udf, host_udf
+    from web_crawler_spark.functions.udfs import url_parts_udf
 
     df = (fakeweb.read.format("fakeweb").option("n", 200).load()
-          .withColumn("canon_url", canon_udf("url"))
-          .withColumn("h2", host_udf("canon_url"))
+          .withColumn("u", url_parts_udf("url"))
+          .select("host", "u.canon_url", F.col("u.host").alias("h2"))
           .withColumn("url_hash", F.xxhash64("canon_url")))
     bad = df.filter((F.col("h2") != F.col("host")) | F.col("url_hash").isNull()).count()
     assert bad == 0

@@ -18,6 +18,7 @@ from web_crawler_spark.plans.pipeline_ops import (
     dup_spans_df,
 )
 from web_crawler_spark.plans.queries import PLANTED_SPAN_DOCS
+from web_crawler_spark.session import plan_truncated
 
 SF = "/root/testdata/sf0.001"
 
@@ -134,8 +135,26 @@ def test_curriculum_deterministic(spark):
 def test_no_cartesian_in_span_plan(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     plan = dup_spans_df(d, k=8)._jdf.queryExecution().executedPlan().toString()
+    # a negative check would pass on a cut plan
+    assert not plan_truncated(plan)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_plan_truncated_detects_cut_plan(spark):
+    """plan_truncated must recognise the marker Spark appends when a plan
+    string hits spark.sql.maxPlanStringLength, or the guard above is
+    vacuous."""
+    qe = spark.range(10).selectExpr("id * 2 AS x").where("x > 3")._jdf.queryExecution()
+    assert not plan_truncated(qe.executedPlan().toString())
+    key = "spark.sql.maxPlanStringLength"
+    prior = spark.conf.get(key)
+    try:
+        for cap in ("100", "0"):
+            spark.conf.set(key, cap)
+            assert plan_truncated(qe.executedPlan().toString()), cap
+    finally:
+        spark.conf.set(key, prior)
 
 
 def _ref_spans(docs: dict[int, list[str]], k: int = 8):

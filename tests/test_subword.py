@@ -13,6 +13,7 @@ from web_crawler_spark.plans.pipeline_ops import (
     segment_word,
     subword_tokenize_df,
 )
+from web_crawler_spark.session import plan_truncated
 
 SF = "/root/testdata/sf0.001"
 
@@ -75,4 +76,5 @@ def test_broadcast_lexicon_plan(spark):
     never shuffle for the lookup."""
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     plan = subword_tokenize_df(d)._jdf.queryExecution().executedPlan().toString()
+    assert not plan_truncated(plan)
     assert "BroadcastHashJoin" in plan

@@ -7,6 +7,7 @@ from hypothesis import given, settings, strategies as st
 from web_crawler_spark.core.urls import (
     canonicalize_series, host_of_series, path_of_series,
 )
+from web_crawler_spark.functions.udfs import url_parts_udf
 
 SETTINGS = dict(max_examples=200, derandomize=True, deadline=None)
 
@@ -74,3 +75,17 @@ def test_series_equals_rowwise(urls):
     batch = list(canonicalize_series(pd.Series(urls)))
     single = [canonicalize_series(pd.Series([u])).iloc[0] for u in urls]
     assert batch == single
+
+
+@given(urls=st.lists(url_st, min_size=1, max_size=20))
+@settings(max_examples=50, derandomize=True, deadline=None)
+def test_url_parts_udf_equals_series(urls):
+    """The fused struct UDF == the three series functions it fuses
+    (canonicalize, then host and path of the canonical URL)."""
+    s = pd.Series(urls)
+    parts = url_parts_udf.func(s)
+    canon = canonicalize_series(s)
+    assert list(parts.columns) == ["canon_url", "host", "path"]
+    assert list(parts["canon_url"]) == list(canon)
+    assert list(parts["host"]) == list(host_of_series(canon))
+    assert list(parts["path"]) == list(path_of_series(canon))

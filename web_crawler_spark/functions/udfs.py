@@ -17,19 +17,15 @@ from web_crawler_spark.core import imagecodec, minhash
 from web_crawler_spark.core.urls import canonicalize_series, host_of_series, path_of_series
 
 
-@F.pandas_udf(T.StringType())
-def canon_udf(urls: pd.Series) -> pd.Series:
-    return canonicalize_series(urls)
-
-
-@F.pandas_udf(T.StringType())
-def host_udf(canon_urls: pd.Series) -> pd.Series:
-    return host_of_series(canon_urls)
-
-
-@F.pandas_udf(T.StringType())
-def path_udf(canon_urls: pd.Series) -> pd.Series:
-    return path_of_series(canon_urls)
+@F.pandas_udf(T.StructType([T.StructField(c, T.StringType())
+                             for c in ("canon_url", "host", "path")]))
+def url_parts_udf(urls: pd.Series) -> pd.DataFrame:
+    """url → struct<canon_url, host, path>. One Arrow eval node (and one
+    Python worker per task) where a chain of single-column UDFs would
+    need one node and one worker each."""
+    canon = canonicalize_series(urls)
+    return pd.DataFrame({"canon_url": canon, "host": host_of_series(canon),
+                         "path": path_of_series(canon)})
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))

@@ -47,12 +47,10 @@ from web_crawler_spark import schemas
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.core import bloom, cuckoo
 from web_crawler_spark.functions.udfs import (
-    canon_udf,
     caption_bands_udf,
-    host_udf,
     jaccard3_udf,
     pair_psnr_cols,
-    path_udf,
+    url_parts_udf,
 )
 from web_crawler_spark.plans.seq import with_global_seq
 from web_crawler_spark.sources import robots as robots_src
@@ -98,11 +96,19 @@ def _metrics_arrow(rows: list[tuple]):
     the catalog's driver-side append (no Spark job for a literal)."""
     import pyarrow as pa
 
-    cols = list(zip(*rows)) if rows else [[] for _ in range(9)]
+    cols = list(zip(*rows))
     names = ["round", "partition_id", "fetched", "kept", "dup_exact",
              "neardup_image", "neardup_caption", "rejected_robots", "rejected_seen"]
     types = [pa.int32(), pa.int32()] + [pa.int64()] * 7
     return pa.table({n: pa.array(c, t) for n, c, t in zip(names, cols, types)})
+
+
+def _with_url_parts(df: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus canon_url, host and path of ``url`` — one
+    fused UDF call, so one Arrow eval node and one Python worker per
+    task."""
+    return (df.select(*keep, url_parts_udf("url").alias("_u"))
+            .select(*keep, "_u.canon_url", "_u.host", "_u.path"))
 
 
 def link_targets_expr(image_id_col, n_corpus: int):
@@ -347,47 +353,50 @@ class CrawlEngine:
     # ------------------------------------------------------------------ init
     def _url_map(self) -> DataFrame:
         urls = self.spark.read.parquet(os.path.join(self.fix_dir, "urls.parquet"))
-        return (
-            urls.withColumn("canon_url", canon_udf("url"))
-            .withColumn("host", host_udf("canon_url"))
-            .withColumn("path", path_udf("canon_url"))
-            .select("image_id", "canon_url", "host", "path")
-        )
+        return _with_url_parts(urls, "image_id")
 
     def init_state(self) -> None:
         """Round -1: seed the frontier + seen set (seeds.txt in file
         order, then sitemap URLs as depth-0 discoveries ordered by
         (sitemap host, in-file position) — SURVEY.md S4); materialize
         url_map."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         cfg, spark = self.cfg, self.spark
         url_map = self._url_map()
         self.cat.stage("url_map", url_map.repartition(8, "canon_url"))
 
         with open(os.path.join(self.fix_dir, "seeds.txt")) as f:
             seeds = [l.strip() for l in f if l.strip()]
-        seeds_df = spark.createDataFrame(
-            [(u, 0, "", i) for i, u in enumerate(seeds)],
-            schema="url string, phase int, ord_host string, pos int",
-        )
+        n = len(seeds)
+        # from Arrow the rows reach the JVM as a local relation; a list of
+        # tuples is re-pickled by a Python RDD job, which starts a second
+        # worker daemon beside the one the UDFs use
+        seeds_df = spark.createDataFrame(pa.table({
+            "url": pa.array(seeds, pa.string()),
+            "phase": pa.array([0] * n, pa.int32()),
+            "ord_host": pa.array([""] * n, pa.string()),
+            "pos": pa.array(range(n), pa.int32()),
+        }))
         sm_dir = os.path.join(self.fix_dir, "sitemaps")
         if os.path.isdir(sm_dir):
             sm = robots_src.load_sitemaps(spark, sm_dir).select(
                 "url", F.lit(1).alias("phase"),
                 F.col("host").alias("ord_host"), F.col("pos"))
             seeds_df = seeds_df.unionByName(sm)
-        s = (
-            seeds_df.withColumn("canon_url", canon_udf("url"))
-            .withColumn("host", host_udf("canon_url"))
-            .withColumn("path", path_udf("canon_url"))
-        )
+        s = _with_url_parts(seeds_df, "phase", "ord_host", "pos")
         # first occurrence per canonical URL, in enqueue order (contract)
         w = Window.partitionBy("canon_url").orderBy("phase", "ord_host", "pos")
         s = s.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
         s = s.join(F.broadcast(self.robots), "host", "left")
-        s = s.withColumn(
-            "allowed",
-            robots_src.allowed_expr(F.col("path"), F.col("disallow"), F.col("allow")),
-        )
+        # persisted: the frontier stage (whose sequence pass reads it
+        # twice) and the seen append share one run of the URL pipeline
+        s = s.select(
+            "canon_url", "host", "phase", "ord_host", "pos",
+            robots_src.allowed_expr(F.col("path"), F.col("disallow"), F.col("allow"))
+            .alias("allowed"),
+        ).persist()
         allowed = s.filter("allowed")
         # (phase, ord_host) buckets are a monotone coarsening of the
         # (phase, ord_host, pos) enqueue order → parallel assignment
@@ -402,25 +411,19 @@ class CrawlEngine:
             F.lit(0).alias("ready_round"),
         )
         seen = s.select("canon_url", F.xxhash64("canon_url").alias("url_hash"))
-        n_seq = frontier.count()
-        empty_surv = spark.createDataFrame(
-            [], "fetch_seq long, image_id string, w int, h int, phash long,"
-                "caption string, content_sha string, bands array<bigint>")
-        with ThreadPoolExecutor(max_workers=6) as ex:
-            futs = [
-                ex.submit(self.cat.stage, "frontier", frontier, 8),
-                ex.submit(self.cat.stage, "host_next",
-                          spark.createDataFrame([], schemas.HOST_NEXT)),
-                ex.submit(self.cat.append, "seen", seen, 1),
-                ex.submit(self.cat.append, "survivors", empty_surv, 1),
-                ex.submit(self.cat.append, "bands",
-                          spark.createDataFrame([], schemas.BAND_IDX), 1),
-                ex.submit(self.cat.append, "crawl_log",
-                          spark.createDataFrame([], schemas.CRAWL_LOG), 1),
-            ]
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            futs = [ex.submit(self.cat.stage, "frontier", frontier, 8),
+                    ex.submit(self.cat.append, "seen", seen, 1)]
+            # the empty tables are driver-side writes, no Spark job
+            tbl = self.cat.table_schemas
+            self.cat.stage_local("host_next", to_arrow_schema(tbl["host_next"]).empty_table())
+            for name in ("survivors", "bands", "crawl_log", "metrics"):
+                self.cat.append_local(name, to_arrow_schema(tbl[name]).empty_table())
             for f in futs:
                 f.result()
-        self.cat.append_local("metrics", _metrics_arrow([]))
+        s.unpersist()
+        # footer-only count of the staged frontier — no Spark job
+        n_seq = self.cat.staged_rowcount("frontier")
         self.cat.commit(-1, {"next_seq": n_seq, "next_fetch_seq": 0, "budget_spent": 0})
 
     # ----------------------------------------------------------------- round
@@ -693,14 +696,16 @@ class CrawlEngine:
         # buckets of fetch_seq are a monotone coarsening of the
         # discovery order — one round's new links can be billions of
         # rows at frontier scale, so no unpartitioned window here.
-        # The bucket WIDTH is a fixed 64 fetch_seqs: with_global_seq's
+        # The bucket WIDTH is a fixed 4096 fetch_seqs: with_global_seq's
         # output is independent of the granularity (any width yields the
         # same total order), and a width that needs no n_fetched lets the
         # frontier rewrite launch WITH the other writes instead of
-        # serializing behind the counting agg (r5: ~5s/round of wall).
-        # At 10^7-fetch rounds that is ~156k offset structs in the packed
-        # prefix-sum row (~2.5 MB) — fine; windows stay ≤ 64×fan-out rows.
-        fb = 64
+        # serializing behind the counting agg. The offset pass is O(B²)
+        # additions in one task over the bucket count B, so the width
+        # must keep B in the low thousands at the design point: ~2.4k
+        # buckets at 10^7-fetch rounds (a width of 64 would give ~156k
+        # buckets, ~1.2e10 additions). Windows stay ≤ 4096×fan-out rows.
+        fb = 4096
         an = with_global_seq(
             allowed_new.withColumn(
                 "_fb",
@@ -718,7 +723,9 @@ class CrawlEngine:
             F.lit(r + 1).alias("ready_round"),
         )
         frontier2 = (
-            frontier.join(batch.select("discovered_seq"), "discovered_seq", "left_anti")
+            # anti-join on the persisted sel (batch's rows, without
+            # re-running with_global_seq's sequence subplan)
+            frontier.join(sel.select("discovered_seq"), "discovered_seq", "left_anti")
             .unionByName(frontier_add)
         )
         # frontier lands coalesced (content is what matters; at

@@ -9,13 +9,31 @@ Scale notes (the settings that matter at 1000 executors / 100 TB):
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden by AQE coalescing + explicit repartition on the frontier's
   salted host-hash buckets.
+- Plan strings capped at 128k chars (spark.sql.maxPlanStringLength).
+  Spark prints a cached plan inline once per reference, so the crawl
+  round's write plans, which nest six persisted frames, render to
+  megabytes, and AQE renders them again after every query stage (UI on
+  or off). The largest real plan (a formatted explain of the analytics
+  queries) is about 38k chars, far below the cap.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# the suffix Spark appends to a plan string cut at maxPlanStringLength
+# ("Truncated plan of N characters" when the limit is 0)
+_TRUNCATED = re.compile(r"(\.\.\. \d+ more characters|Truncated plan of \d+ characters)\s*$")
+
+
+def plan_truncated(plan: str) -> bool:
+    """True when ``plan`` (a plan or explain string) was cut at
+    spark.sql.maxPlanStringLength — a shape check must not pass on a
+    cut plan, where an operator it looks for may be missing."""
+    return bool(_TRUNCATED.search(plan))
 
 
 def get_spark(
@@ -41,6 +59,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        .config("spark.sql.maxPlanStringLength", "128k")
         # v2 commit algorithm: task outputs move straight to the final
         # dir (one rename, not two) — the BSP loop writes several small
         # tables per superstep, so committer latency is on the round path

@@ -189,13 +189,24 @@ class ManifestCatalog:
     # -- writes -----------------------------------------------------------
     def stage(self, name: str, df: DataFrame, partitions: int | None = None) -> int:
         """Write a new version of ``name``; becomes visible only at commit."""
+        v = self._next_stage_version(name)
+        path = os.path.join(self.tables_dir, name, f"v{v}")
+        w = df.coalesce(partitions) if partitions else df
+        w.write.mode("overwrite").parquet(path)
+        return v
+
+    def stage_local(self, name: str, table) -> int:
+        """``stage`` for a small DRIVER-SIDE pyarrow table — the staged
+        twin of ``append_local`` (no Spark job)."""
+        v = self._next_stage_version(name)
+        self._write_local(name, v, table)
+        return v
+
+    def _next_stage_version(self, name: str) -> int:
         with self._lock:
             self._staged = getattr(self, "_staged", {})
             v = int(self._staged.get(name, self.manifest["versions"].get(name, -1))) + 1
             self._staged[name] = v
-        path = os.path.join(self.tables_dir, name, f"v{v}")
-        w = df.coalesce(partitions) if partitions else df
-        w.write.mode("overwrite").parquet(path)
         return v
 
     def append(self, name: str, df: DataFrame, partitions: int | None = None) -> int:
@@ -243,17 +254,20 @@ class ManifestCatalog:
         Spark job — for per-round literal frames (metrics rows, already
         collected) where a distributed write is pure fixed cost. The
         Iceberg twin appends the same tiny batch through writeTo()."""
-        import pyarrow.parquet as pq
-
         with self._lock:
             self._staged_appends = getattr(self, "_staged_appends", {})
             staged = self._staged_appends
             v = self._next_part_version(name, staged)
             staged.setdefault(name, []).append(v)
+        self._write_local(name, v, table)
+        return v
+
+    def _write_local(self, name: str, v: int, table) -> None:
+        import pyarrow.parquet as pq
+
         path = os.path.join(self.tables_dir, name, f"v{v}")
         os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        return v
 
     # -- schema evolution / merge ------------------------------------------
     def alter_add_columns(self, name: str, fields) -> None:
