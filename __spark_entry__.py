@@ -41,7 +41,6 @@ def entry(spark: SparkSession) -> DataFrame:
 #                        packed_tok, last_seg_len; closed-form oracle)
 #   T20/T25 samplers  -> sample_quota (per-stratum counts vs an SQL
 #                        reimplementation of largest-remainder quotas)
-# The standalone q_* functions remain in plans/queries.py for tests.
 _SQL_CHECKED = {
     # scans / projections / scalar functions
     "scan_project": (Q.q_scan_project, Q.SQL_SCAN_PROJECT),

@@ -274,7 +274,7 @@ def run_soak() -> None:
 
 def run_frontier_stress(rows: int, hosts: int, k: int, cores: int) -> None:
     """North-rule frontier metric at stress scale: drive the ENGINE's
-    ``schedule_batch`` — the exact code ``_run_round`` schedules with —
+    ``schedule_batch`` — the exact code ``run_round`` schedules with —
     over a synthetic deterministic frontier of ``rows`` URLs across
     ``hosts`` hosts and report frontier URLs/sec. The frontier is
     generated distributed from ``spark.range`` (256 partitions, no

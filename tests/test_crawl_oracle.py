@@ -2,12 +2,16 @@
 invariants must match the reference oracle 100%, and runs must be
 resumable from snapshot with identical results."""
 
+import os
 import shutil
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from oracle.refcrawler import crawl
+from web_crawler_spark import schemas
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.core import imagecodec
 from web_crawler_spark.plans.crawl import CrawlEngine
@@ -97,3 +101,15 @@ def test_resume_equals_uninterrupted(spark, fix_dir, tmp_path_factory, engine_an
     a = eng_full.cat.read("crawl_log").orderBy("fetch_seq").toPandas()
     b = e2.cat.read("crawl_log").orderBy("fetch_seq").toPandas()
     assert a.equals(b)
+    # every committed metrics part (init_state's empty one and each
+    # round's driver-side rows) carries the declared arrow schema, so the
+    # append table has one footer schema
+    want = to_arrow_schema(schemas.METRICS)
+    parts = e2.cat.parts("metrics")
+    assert len(parts) > 1  # init_state's part and the rounds'
+    for v in parts:
+        d = os.path.join(e2.cat.tables_dir, "metrics", f"v{v}")
+        for fn in sorted(os.listdir(d)):
+            if fn.endswith(".parquet"):
+                got = pq.read_schema(os.path.join(d, fn))
+                assert got.equals(want), (v, fn, got)

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from web_crawler_spark.streaming import (
     seen_filter_dropdup_stream,
     stateful_seen_filter_stream,
-    stateful_seen_filter_tws,
     streaming_round_demo,
     windowed_event_metrics_stream,
 )
@@ -77,22 +76,6 @@ def test_stateful_seen_filter_dedups_exactly(spark, tmp_path):
     got = stateful_seen_filter_stream(spark, d, str(tmp_path / "out"))
     assert got.count() == 40  # exactly one row per distinct url_hash
     assert {r.url_hash for r in got.collect()} == set(range(40))
-
-
-def test_tws_seen_filter_matches_legacy_api(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 MapState) must produce the
-    same exact dedup as the applyInPandasWithState path. Skipped where
-    the TWS runner's protobuf dependency is absent (this sandbox)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    urls = spark.createDataFrame(
-        [(i % 33, f"http://h{i % 33}.example/p") for i in range(150)],
-        "url_hash long, canon_url string",
-    )
-    d = str(tmp_path / "urls")
-    urls.repartition(3).write.parquet(d)
-    got = stateful_seen_filter_tws(spark, d, str(tmp_path / "out"))
-    assert got.count() == 33
-    assert {r.url_hash for r in got.collect()} == set(range(33))
 
 
 def test_dropdup_stream_matches_python_state_path(spark, tmp_path):

@@ -28,7 +28,6 @@ import numpy as np
 K = 64
 BANDS = 16
 ROWS = K // BANDS
-THETA = 0.8
 _MIX = np.uint64(0x9E3779B97F4A7C15)
 
 _rng = np.random.default_rng(20260816)

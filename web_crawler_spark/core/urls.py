@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-_TRACKING = ("utm_", "fbclid", "gclid")
-
 
 def _canon_query(q: str) -> str:
     if not q:
@@ -78,11 +76,6 @@ def canonicalize_series(urls: pd.Series) -> pd.Series:
     # rows that did not parse as absolute URLs pass through stripped
     out = out.where(~ext["scheme"].isna(), s)
     return out
-
-
-def canonicalize_one(url: str) -> str:
-    """Scalar convenience wrapper (oracle hot path uses the Series form)."""
-    return canonicalize_series(pd.Series([url])).iloc[0]
 
 
 def host_of_series(canon_urls: pd.Series) -> pd.Series:

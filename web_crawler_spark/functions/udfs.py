@@ -59,24 +59,3 @@ def pair_psnr_cols(df, a=("a_bytes", "a_w", "a_h", "a_fmt"), b=("b_bytes", "b_w"
             yield pdf.assign(pair_psnr=vals)
 
     return df.mapInPandas(fn, schema)
-
-
-def decode_stats(df, bytes_col="bytes", w_col="w", h_col="h", fmt_col="fmt"):
-    """Decode images and append per-image pixel stats (mean/std) — the
-    feature-extraction plumbing for multimodal columns. Decode is real
-    (numpy codecs); heavier codecs (JPEG etc.) would slot in here behind
-    the same mapInPandas signature."""
-    schema = T.StructType(
-        df.schema.fields
-        + [T.StructField("px_mean", T.DoubleType()), T.StructField("px_std", T.DoubleType())]
-    )
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            means = np.empty(len(pdf)); stds = np.empty(len(pdf))
-            for i, (bb, w, h, fmt) in enumerate(zip(pdf[bytes_col], pdf[w_col], pdf[h_col], pdf[fmt_col])):
-                px = imagecodec.decode(bb, int(w), int(h), fmt)
-                means[i] = float(px.mean()); stds[i] = float(px.std())
-            yield pdf.assign(px_mean=means, px_std=stds)
-
-    return df.mapInPandas(fn, schema)

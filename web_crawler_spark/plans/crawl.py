@@ -41,7 +41,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 from web_crawler_spark import schemas
 from web_crawler_spark.config import CrawlConfig
@@ -56,26 +56,7 @@ from web_crawler_spark.plans.seq import with_global_seq
 from web_crawler_spark.sources import robots as robots_src
 from web_crawler_spark.sources.catalog import ManifestCatalog
 
-SURVIVOR_COLS = ["fetch_seq", "image_id", "w", "h", "phash", "caption", "content_sha", "bands"]
-
-_PROF = os.environ.get("WCS_PROF") == "1"
-
-
-class _T:
-    """Env-gated action timer (WCS_PROF=1): prints per-action wall time."""
-
-    def __init__(self, label: str):
-        self.label = label
-
-    def __enter__(self):
-        import time
-        self.t0 = time.perf_counter()
-        return self
-
-    def __exit__(self, *a):
-        import time
-        if _PROF:
-            print(f"      [prof] {self.label}: {time.perf_counter() - self.t0:.2f}s", flush=True)
+SURVIVOR_COLS = schemas.SURVIVORS.fieldNames()
 
 
 def _obs_val(obs: Observation, key: str, fallback) -> int:
@@ -92,15 +73,15 @@ def _obs_val(obs: Observation, key: str, fallback) -> int:
 
 def _metrics_arrow(rows: list[tuple]):
     """Per-round metrics rows (already collected — they are at most
-    n_buckets+1 tuples) as a pyarrow table matching schemas.METRICS, for
-    the catalog's driver-side append (no Spark job for a literal)."""
+    n_buckets+1 tuples) as a pyarrow table with schemas.METRICS' arrow
+    schema, for the catalog's driver-side append (no Spark job for a
+    literal)."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    cols = list(zip(*rows))
-    names = ["round", "partition_id", "fetched", "kept", "dup_exact",
-             "neardup_image", "neardup_caption", "rejected_robots", "rejected_seen"]
-    types = [pa.int32(), pa.int32()] + [pa.int64()] * 7
-    return pa.table({n: pa.array(c, t) for n, c, t in zip(names, cols, types)})
+    schema = to_arrow_schema(schemas.METRICS)
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=schema)
 
 
 def _with_url_parts(df: DataFrame, *keep: str) -> DataFrame:
@@ -147,7 +128,7 @@ def schedule_batch(frontier, host_next, r: int, cfg: CrawlConfig, *,
     assigned, and the persisted selection frame (callers unpersist it
     after the round's actions — it is cached so the count and
     row_number branches share one evaluation of the eligibility
-    subplan). Used by ``CrawlEngine._run_round`` and, over a synthetic
+    subplan). Used by ``CrawlEngine.run_round`` and, over a synthetic
     10^8-row frontier, by ``bench.py --frontier`` — the stress evidence
     for the north-rule frontier-URLs/sec metric runs this exact code.
 
@@ -213,7 +194,7 @@ def filter_new_urls(cand, seen_tbl, maybe_udf=None):
     the anti-join entirely; only suspected-seen rows
     (~|seen∩cand| + FPR·|cand|) pay the shuffle. The two branches are
     disjoint, so exactness is preserved. Used by
-    ``CrawlEngine._run_round`` every round and stressed at 10^8
+    ``CrawlEngine.run_round`` every round and stressed at 10^8
     candidates by ``bench.py --seen`` (BENCH/FRONTIER.md)."""
     keys = ["url_hash", "canon_url"]
     if maybe_udf is None:
@@ -236,22 +217,8 @@ class CrawlEngine:
             "crawl_log": schemas.CRAWL_LOG,
             "bands": schemas.BAND_IDX,
             "metrics": schemas.METRICS,
-            "url_map": T.StructType([
-                T.StructField("image_id", T.StringType()),
-                T.StructField("canon_url", T.StringType()),
-                T.StructField("host", T.StringType()),
-                T.StructField("path", T.StringType()),
-            ]),
-            "survivors": T.StructType([
-                T.StructField("fetch_seq", T.LongType()),
-                T.StructField("image_id", T.StringType()),
-                T.StructField("w", T.IntegerType()),
-                T.StructField("h", T.IntegerType()),
-                T.StructField("phash", T.LongType()),
-                T.StructField("caption", T.StringType()),
-                T.StructField("content_sha", T.StringType()),
-                T.StructField("bands", T.ArrayType(T.LongType())),
-            ]),
+            "url_map": schemas.URL_MAP,
+            "survivors": schemas.SURVIVORS,
         })
         self._ulm = None  # cached url_map frame (static after init)
         self._rank_cache = None  # (through_round, rank frame) memo
@@ -428,13 +395,7 @@ class CrawlEngine:
 
     # ----------------------------------------------------------------- round
     def run_round(self, r: int) -> dict:
-        with _T(f"round{r}.total"):
-            return self._run_round(r)
-
-    def _run_round(self, r: int) -> dict:
-        cfg, spark, cat = self.cfg, self.spark, self.cat
-        _tb = _T("plan.build")
-        _tb.__enter__()
+        cfg, cat = self.cfg, self.cat
         ctr = cat.counters()
         budget_left = (cfg.global_budget - ctr["budget_spent"]
                        if cfg.global_budget is not None else None)
@@ -443,15 +404,16 @@ class CrawlEngine:
 
         frontier = cat.read("frontier")
         host_next = cat.read("host_next")
+        # authority ranks are refreshed every k rounds: round r ranks on
+        # the log as of its last refresh round
+        rank_round = r - r % max(1, int(cfg.authority_refresh_every))
         batch, sel = schedule_batch(
             frontier, host_next, r, cfg,
             next_seq=int(ctr["next_seq"]),
             next_fetch_seq=int(ctr["next_fetch_seq"]),
             budget_left=budget_left,
-            host_rank=(self._host_rank_q(
-                           r - (r % max(1, int(cfg.authority_refresh_every))))
-                       if cfg.priority_mode == "authority"
-                       and r - (r % max(1, int(cfg.authority_refresh_every))) > 0
+            host_rank=(self._host_rank_q(rank_round)
+                       if cfg.priority_mode == "authority" and rank_round > 0
                        and int(ctr["next_fetch_seq"]) > 0 else None),
         )
 
@@ -665,7 +627,6 @@ class CrawlEngine:
                     int(n_new - n_allowed), int(n_links - n_new))],
             ))
 
-        _tb.__exit__()
         # -- overlapped action phase (r4, VERDICT r3 #6; widened r5): of
         # the seven per-round jobs only metrics needs the counting agg's
         # outputs — the SIX table writes (frontier included, now that its
@@ -680,17 +641,6 @@ class CrawlEngine:
         # commit() — staged writes of a zero-fetch round are empty
         # frames (or, for frontier, byte-identical content) that a later
         # commit may include harmlessly.
-        def _timed(label, fn, *a):
-            if not _PROF:
-                return fn(*a)
-            import time as _time
-            t0 = _time.perf_counter()
-            try:
-                return fn(*a)
-            finally:
-                print(f"      [prof] job.{label}: "
-                      f"{_time.perf_counter() - t0:.2f}s", flush=True)
-
         allowed_new = new.filter("allowed")
         # two-phase discovered_seq over (fetch_seq, link_pos): range-
         # buckets of fetch_seq are a monotone coarsening of the
@@ -732,23 +682,21 @@ class CrawlEngine:
         # cluster scale the stage would bucket-partition by the
         # salted host hash for co-located reads — locally that extra
         # shuffle per round is pure overhead)
-        with _T("round.jobs"), ThreadPoolExecutor(max_workers=8) as ex:
+        with ThreadPoolExecutor(max_workers=8) as ex:
             futs = [
-                ex.submit(_timed, "host_next", cat.stage, "host_next", host_next2),
-                ex.submit(_timed, "seen", cat.append, "seen", seen_add, 1),
-                ex.submit(_timed, "survivors", cat.append, "survivors",
+                ex.submit(cat.stage, "host_next", host_next2),
+                ex.submit(cat.append, "seen", seen_add, 1),
+                ex.submit(cat.append, "survivors",
                           batch_surv.select(*SURVIVOR_COLS), 1),
-                ex.submit(_timed, "bands", cat.append, "bands", bands_add, 1),
-                ex.submit(_timed, "crawl_log", cat.append, "crawl_log", log_add, 1),
+                ex.submit(cat.append, "bands", bands_add, 1),
+                ex.submit(cat.append, "crawl_log", log_add, 1),
                 # on a zero-fetch round this rewrites the frontier with
                 # byte-identical content (batch and frontier_add are both
                 # empty) — a wasted-but-harmless job on a rare round, in
                 # exchange for full overlap on every normal one
-                ex.submit(_timed, "frontier", cat.stage, "frontier",
-                          frontier2, 8),
+                ex.submit(cat.stage, "frontier", frontier2, 8),
             ]
-            with _T("new.agg"):
-                _c = new.agg(F.count("*").alias("n"), F.count_if("allowed").alias("a")).first()
+            _c = new.agg(F.count("*").alias("n"), F.count_if("allowed").alias("a")).first()
             n_new, n_allowed = int(_c["n"]), int(_c["a"])
             n_links = _obs_val(disc_obs, "n", disc.count)
             n_fetched = _obs_val(fetch_obs, "n", fetched.count)
@@ -759,12 +707,10 @@ class CrawlEngine:
                     df.unpersist()
                 n_frontier = cat.staged_rowcount("frontier")
                 return {"fetched": 0, "frontier": n_frontier, "stopped": n_frontier == 0}
-            futs.append(ex.submit(_timed, "metrics", _collect_and_append_metrics,
+            futs.append(ex.submit(_collect_and_append_metrics,
                                   n_new, n_allowed, n_links))
             for f in futs:
                 f.result()
-        _tc = _T("commit.etc")
-        _tc.__enter__()
         cat.commit(r, {
             **ctr,  # carry forward maintenance markers (e.g. last_evicted)
             "next_seq": int(ctr["next_seq"] + n_allowed),
@@ -779,7 +725,6 @@ class CrawlEngine:
             df.unpersist()
         # footer-only count of the just-written frontier — no Spark job
         n_frontier = cat.staged_rowcount("frontier")
-        _tc.__exit__()
         return {"fetched": n_fetched, "frontier": n_frontier, "stopped": n_frontier == 0}
 
     # ------------------------------------------------------- recrawl window
@@ -885,7 +830,7 @@ class CrawlEngine:
         return (
             self.cat.read("survivors")
             .join(kept_seq, "fetch_seq", "left_semi")
-            .select("fetch_seq", "image_id", "caption", "phash", "content_sha")
+            .select(*schemas.IMAGES_KEPT.fieldNames())
         )
 
     # ------------------------------------------------------------------- run

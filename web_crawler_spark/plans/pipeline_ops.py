@@ -260,7 +260,7 @@ def q_dedup_embedding_cosine(spark, sf):
     """Embedding-cosine near-dup pairs (round(cos,4) >= 0.98, a_id <
     b_id) via MULTI-BAND random-hyperplane LSH + exact residual — the
     scale path for the brute-force SQL oracle twin in queries.py
-    (SQL_DEDUP_EMBEDDING_COSINE): candidates come from an equi-join on
+    (SQL_DEDUP_EMBEDDING_COSINE_DRIVER): candidates come from an equi-join on
     (band_idx, 8-bit sign code), so the shuffle carries only
     (vec_id, band keys), never the O(n²) pair matrix; exact JVM-side
     cosine then re-checks each candidate pair.
@@ -362,15 +362,6 @@ LANG_PLANTS = [
     ("zh", "这是一个中文文档 网络 数据 爬虫 图像 标题"),
     ("ru", "это русский документ сеть данные пример проверка языка"),
 ]
-
-
-def q_lang_id(spark, sf):
-    d = _docs(spark, sf)
-    return (
-        d.withColumn("lang_pred", lang_id_udf("text"))
-        .select("doc_id", "lang", "lang_pred",
-                (F.col("lang") == F.col("lang_pred")).alias("correct"))
-    )
 
 
 def q_lang_id_driver(spark, sf):
@@ -813,13 +804,6 @@ def balanced_sample_df(d: DataFrame, strata_col: str, k: int,
         .filter(F.col("_rk") <= k)
         .drop("_rk")
     )
-
-
-def q_balanced_sample(spark, sf):
-    """Language-balanced deterministic sample of documents (24 per
-    lang) + the Bernoulli sampleBy twin's expected-fraction metadata."""
-    d = _docs(spark, sf).select("doc_id", "lang", "n_chars")
-    return balanced_sample_df(d, "lang", k=24)
 
 
 def mixture_sample_df(d: DataFrame, strata_col: str, weights: dict,

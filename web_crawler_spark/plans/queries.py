@@ -60,8 +60,7 @@ FROM part GROUP BY 1
 
 def q_string_functions(spark, sf):
     """String surface + JVM regexp_count (absorbs the former
-    `regexp_count` registry key — one driver row per scalar family; the
-    documents-side regexp_count op keeps its own fn q_regexp_count)."""
+    `regexp_count` registry key — one driver row per scalar family)."""
     return _t(spark, sf, "part").select(
         "p_partkey",
         F.upper("p_brand").alias("brand_u"),
@@ -383,8 +382,7 @@ FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 def q_cube_agg(spark, sf):
     """CUBE with grouping_id markers (one driver row for the multi-set
     aggregation family — CUBE, ROLLUP and GROUPING SETS all lower to
-    the same Expand; the explicit GROUPING SETS form keeps its own fn
-    q_grouping_sets for tests)."""
+    the same Expand)."""
     return (
         _t(spark, sf, "lineitem")
         .cube("l_returnflag", "l_linestatus")
@@ -396,20 +394,6 @@ SQL_CUBE_AGG = """
 SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, count(*) AS n,
        GROUPING(l_returnflag, l_linestatus) AS gid
 FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-
-def q_grouping_sets(spark, sf):
-    _t(spark, sf, "orders").createOrReplaceTempView("orders_gs")
-    return spark.sql("""
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n
-        FROM orders_gs
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """)
-
-SQL_GROUPING_SETS = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n
-FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 """
 
 
@@ -440,21 +424,6 @@ SELECT count(DISTINCT l_partkey) AS n_parts, count(DISTINCT l_suppkey) AS n_supp
        count(DISTINCT l_partkey) AS n_parts_bitmap
 FROM lineitem
 """
-
-
-def q_bitmap_distinct(spark, sf):
-    """Exact distinct via Spark's bitmap agg family (SURVEY.md A6): the
-    compact seen-set representation — count must equal COUNT(DISTINCT)."""
-    c = _t(spark, sf, "customer")
-    per_bucket = (
-        c.select(F.bitmap_bucket_number("c_custkey").alias("bkt"),
-                 F.bitmap_bit_position("c_custkey").alias("pos"))
-        .groupBy("bkt")
-        .agg(F.bitmap_construct_agg("pos").alias("bm"))
-    )
-    return per_bucket.agg(F.sum(F.bitmap_count("bm")).alias("n_distinct"))
-
-SQL_BITMAP_DISTINCT = "SELECT count(DISTINCT c_custkey) AS n_distinct FROM customer"
 
 
 def q_approx_distinct(spark, sf):
@@ -539,36 +508,6 @@ FROM orders
 """
 
 
-def q_lag_gap(spark, sf):
-    e = _t(spark, sf, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    sec = F.unix_micros(F.col("ts").cast("timestamp")) / 1e6  # NTZ→LTZ is exact under UTC session tz
-    gap = sec - F.lag(sec).over(w)
-    return (
-        e.select("user_id", "event_id", F.round(gap, 6).alias("gap_s"))
-        .filter(F.col("gap_s").isNotNull())
-    )
-
-SQL_LAG_GAP = """
-SELECT user_id, event_id,
-       round(epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id), 6) AS gap_s
-FROM events QUALIFY gap_s IS NOT NULL
-"""
-
-
-def q_running_sum(spark, sf):
-    e = _t(spark, sf, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(W.unboundedPreceding, 0)
-    return e.select("user_id", "event_id", F.round(F.sum("value").over(w), 4).alias("running_value"))
-
-SQL_RUNNING_SUM = """
-SELECT user_id, event_id,
-       round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value
-FROM events
-"""
-
-
 def q_running_sum_driver(spark, sf):
     """Driver key `running_sum`: the frame-spec running aggregate (W5)
     plus the lag/gap analytic columns (W4 — absorbs the former `lag_gap`
@@ -608,10 +547,6 @@ def q_sort_limit(spark, sf):
         .select("o_orderkey", "o_totalprice")
         .limit(10)
     )
-
-SQL_SORT_LIMIT = """
-SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
-"""
 
 
 def q_window_tumbling(spark, sf):
@@ -654,35 +589,6 @@ SELECT user_id, min(ts) AS s_start, count(*) AS n_events FROM sess GROUP BY user
 
 
 # ======================================================= SO-family: set ops
-
-def q_union_all(spark, sf):
-    o = _t(spark, sf, "orders").select(F.lit("order").alias("src"), F.col("o_custkey").alias("custkey"))
-    c = _t(spark, sf, "customer").select(F.lit("customer").alias("src"), F.col("c_custkey").alias("custkey"))
-    return o.unionByName(c).groupBy("src").agg(F.count("*").alias("n"))
-
-SQL_UNION_ALL = """
-SELECT src, count(*) AS n FROM (
-  SELECT 'order' AS src, o_custkey AS custkey FROM orders
-  UNION ALL SELECT 'customer', c_custkey FROM customer
-) GROUP BY 1
-"""
-
-
-def q_except_op(spark, sf):
-    c = _t(spark, sf, "customer").select(F.col("c_custkey").alias("custkey"))
-    o = _t(spark, sf, "orders").select(F.col("o_custkey").alias("custkey"))
-    return c.exceptAll(o.distinct()).distinct()
-
-SQL_EXCEPT_OP = "SELECT c_custkey AS custkey FROM customer EXCEPT SELECT o_custkey FROM orders"
-
-
-def q_intersect_op(spark, sf):
-    c = _t(spark, sf, "customer").select(F.col("c_custkey").alias("custkey"))
-    o = _t(spark, sf, "orders").select(F.col("o_custkey").alias("custkey"))
-    return c.intersect(o)
-
-SQL_INTERSECT_OP = "SELECT c_custkey AS custkey FROM customer INTERSECT SELECT o_custkey FROM orders"
-
 
 def q_set_ops(spark, sf):
     """UNION ALL / EXCEPT / INTERSECT in one driver row (replaces the
@@ -751,127 +657,7 @@ FROM wide UNPIVOT INCLUDE NULLS (qty FOR status IN (qty_o, qty_f))
 """
 
 
-def q_unpivot(spark, sf):
-    """UNPIVOT/melt: wide per-row measures → long (measure, value) rows
-    — the inverse of pivot, a one-pass Expand (no shuffle until agg)."""
-    li = _t(spark, sf, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_discount", "l_tax")
-    melted = li.unpivot(
-        ["l_orderkey", "l_linenumber"],
-        ["l_quantity", "l_discount", "l_tax"],
-        "measure", "value",
-    )
-    return melted.groupBy("measure").agg(
-        F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total"))
-
-SQL_UNPIVOT = """
-SELECT measure, count(*) AS n, round(sum(value), 4) AS total
-FROM (
-  SELECT l_orderkey, l_linenumber, measure, value
-  FROM lineitem
-  UNPIVOT (value FOR measure IN (l_quantity, l_discount, l_tax))
-) GROUP BY 1
-"""
-
-
-def q_array_functions(spark, sf):
-    """Array algebra over the tokenized text: distinct/sort/intersect
-    with the stopword list, slicing — the collection surface a document
-    pipeline leans on."""
-    d = _t(spark, sf, "documents")
-    words = F.split(F.col("text"), " ")
-    stop = F.array(*[F.lit(w) for w in STOPWORDS])
-    return d.select(
-        "doc_id",
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-        F.size(F.array_intersect(F.array_distinct(words), stop)).alias("n_stop_kinds"),
-        F.array_join(F.slice(F.array_sort(F.array_distinct(words)), 1, 3), ",").alias("first3"),
-        F.element_at(words, 1).alias("w0"),
-        F.element_at(words, -1).alias("w_last"),
-    )
-
-SQL_ARRAY_FUNCTIONS = """
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-SELECT doc_id,
-       len(list_distinct(words)) AS n_distinct_words,
-       len(list_intersect(list_distinct(words),
-           ['the','a','key','value','row','table'])) AS n_stop_kinds,
-       array_to_string(list_sort(list_distinct(words))[1:3], ',') AS first3,
-       words[1] AS w0,
-       words[-1] AS w_last
-FROM t
-"""
-
-
-def q_percent_rank(spark, sf):
-    """Distribution-rank windows (percent_rank / cume_dist) per group."""
-    o = _t(spark, sf, "orders")
-    w = W.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
-    return o.select(
-        "o_orderkey", "o_orderstatus",
-        F.round(F.percent_rank().over(w), 6).alias("pr"),
-        F.round(F.cume_dist().over(w), 6).alias("cd"),
-    )
-
-SQL_PERCENT_RANK = """
-SELECT o_orderkey, o_orderstatus,
-       round(percent_rank() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey), 6) AS pr,
-       round(cume_dist() OVER (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey), 6) AS cd
-FROM orders
-"""
-
-
-def q_date_arith(spark, sf):
-    """Date arithmetic: order→ship latency (join), add/last_day,
-    day-of-week bucketing."""
-    li = _t(spark, sf, "lineitem").filter(F.col("l_linenumber") == 1)
-    o = _t(spark, sf, "orders").select("o_orderkey", "o_orderdate")
-    j = li.join(o, li.l_orderkey == o.o_orderkey, "inner")
-    return j.select(
-        "l_orderkey",
-        F.datediff(F.col("l_shipdate"), F.col("o_orderdate")).alias("order_to_ship_days"),
-        F.date_add(F.col("l_shipdate").cast("date"), 30).alias("ship_plus_30"),
-        F.dayofweek("l_shipdate").alias("ship_dow"),
-        F.last_day("l_shipdate").alias("ship_month_end"),
-    )
-
-SQL_DATE_ARITH = """
-SELECT l_orderkey,
-       date_diff('day', o_orderdate::DATE, l_shipdate::DATE) AS order_to_ship_days,
-       (l_shipdate::DATE + INTERVAL 30 DAY)::DATE AS ship_plus_30,
-       dayofweek(l_shipdate) + 1 AS ship_dow,
-       last_day(l_shipdate::DATE) AS ship_month_end
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_linenumber = 1
-"""
-
-
 # ================================= training-data pipeline: dedup / text ops
-
-def q_dedup_exact(spark, sf):
-    """Exact dedup by content fingerprint — hash-groupBy, first-writer-wins."""
-    d = _t(spark, sf, "documents")
-    return (
-        d.withColumn("fp", F.md5("text"))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("keep_doc"), F.count("*").alias("n_copies"))
-    )
-
-SQL_DEDUP_EXACT = """
-SELECT md5(text) AS fp, min(doc_id) AS keep_doc, count(*) AS n_copies
-FROM documents GROUP BY 1
-"""
-
-
-def q_doc_fingerprint(spark, sf):
-    d = _t(spark, sf, "documents")
-    norm = F.lower(F.regexp_replace("text", r"\s+", " "))
-    return d.select("doc_id", F.md5(norm).alias("fp"))
-
-SQL_DOC_FINGERPRINT = r"""
-SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp FROM documents
-"""
-
 
 def q_token_count(spark, sf):
     """Token counting + the normalized md5 document fingerprint (absorbs
@@ -943,18 +729,6 @@ def q_decontaminate(spark, sf, min_shared: int = 2):
         .agg(F.count("*").alias("n_shared_shingles"))
         .filter(F.col("n_shared_shingles") >= min_shared)
     )
-
-SQL_DECONTAMINATE = """
-WITH sh AS (
-  SELECT doc_id, unnest(list_distinct([array_to_string(words[i:i+2], ' ')
-         FOR i IN range(1, greatest(len(words) - 2, 1) + 1)])) AS shingle
-  FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-), bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
-corp AS (SELECT * FROM sh WHERE doc_id % 97 != 0)
-SELECT doc_id, count(*) AS n_shared_shingles
-FROM corp JOIN bench USING (shingle)
-GROUP BY doc_id HAVING count(*) >= 2
-"""
 
 
 def q_token_count_driver(spark, sf, ctx_len: int = 512):
@@ -1509,25 +1283,11 @@ FROM pairs QUALIFY rk <= 5
 """
 
 
-# The Spark plan for `dedup_embedding_cosine` is the LSH-bucketed one in
-# pipeline_ops.q_dedup_embedding_cosine (multi-band hyperplane candidates
-# + exact cosine residual — no cross join); only this brute-force SQL
-# remains here as the DuckDB-checkable oracle twin.
-SQL_DEDUP_EMBEDDING_COSINE = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings)
-SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       round(list_dot_product(a.emb, b.emb)
-             / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) AS cos
-FROM e a CROSS JOIN e b
-WHERE a.vec_id < b.vec_id
-  AND round(list_dot_product(a.emb, b.emb)
-            / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) >= 0.98
-"""
-
-# Twin of pipeline_ops.q_dedup_embedding_cosine_driver: same planted
-# exact-duplicate rows (vec_id % 97 == 0 re-inserted at +1000000), so the
-# driver hash-match exercises 6 real cos=1.0 pairs instead of passing
-# vacuously on a dataset whose max cos ≈ 0.51.
+# Brute-force twin of pipeline_ops.q_dedup_embedding_cosine_driver (whose
+# Spark plan is LSH-bucketed, no cross join): same planted exact-duplicate
+# rows (vec_id % 97 == 0 re-inserted at +1000000), so the driver hash-match
+# exercises 6 real cos=1.0 pairs instead of passing vacuously on a dataset
+# whose max cos ≈ 0.51.
 SQL_DEDUP_EMBEDDING_COSINE_DRIVER = """
 WITH base AS (
   SELECT vec_id, embedding FROM embeddings
@@ -1541,49 +1301,6 @@ FROM e a CROSS JOIN e b
 WHERE a.vec_id < b.vec_id
   AND round(list_dot_product(a.emb, b.emb)
             / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) >= 0.98
-"""
-
-
-def q_corpus_clean(spark, sf):
-    """The composed cleaning pass a training-data pipeline actually
-    runs: quality-score → filter → exact dedup (first-writer-wins per
-    content fingerprint) → per-language corpus stats, as ONE declarative
-    plan so Catalyst fuses scoring+filtering into the scan and the dedup
-    is a single hash shuffle."""
-    d = _t(spark, sf, "documents")
-    words = F.split(F.col("text"), " ")
-    stop = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
-    scored = d.select(
-        "doc_id", "lang", "text", "n_chars",
-        F.size(words).alias("n_words"),
-        (stop / F.greatest(F.size(words), F.lit(1))).alias("stop_ratio"),
-    )
-    filtered = scored.filter((F.col("n_words") >= 5) & (F.col("stop_ratio") <= 0.5))
-    w = W.partitionBy(F.md5("text")).orderBy("doc_id")
-    deduped = filtered.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-    return deduped.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.round(F.avg("n_words"), 4).alias("avg_words"),
-        F.sum("n_chars").alias("total_chars"),
-    )
-
-SQL_CORPUS_CLEAN = """
-WITH scored AS (
-  SELECT doc_id, lang, text, n_chars,
-         len(string_split(text, ' ')) AS n_words,
-         len(list_filter(string_split(text, ' '),
-             w -> w IN ('the','a','key','value','row','table')))
-           / greatest(len(string_split(text, ' ')), 1) AS stop_ratio
-  FROM documents
-), filtered AS (
-  SELECT * FROM scored WHERE n_words >= 5 AND stop_ratio <= 0.5
-), deduped AS (
-  SELECT * FROM filtered
-  QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
-)
-SELECT lang, count(*) AS n_docs, round(avg(n_words), 4) AS avg_words,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM deduped GROUP BY 1
 """
 
 
@@ -1656,48 +1373,6 @@ SELECT r_name,
        count(*) AS n_nations
 FROM nation JOIN region ON n_regionkey = r_regionkey
 GROUP BY 1
-"""
-
-
-def q_conditional_agg(spark, sf):
-    """FILTER-clause style conditional aggregation over order status."""
-    o = _t(spark, sf, "orders")
-    return (
-        o.groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n_orders"),
-             F.count_if(F.col("o_orderstatus") == "F").alias("n_filled"),
-             F.count_if(F.col("o_totalprice") > 100000).alias("n_large"),
-             F.round(F.sum(F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice"))
-                           .otherwise(F.lit(0.0))), 2).alias("filled_value"))
-    )
-
-SQL_CONDITIONAL_AGG = """
-SELECT o_orderpriority,
-       count(*) AS n_orders,
-       count(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
-       count(*) FILTER (WHERE o_totalprice > 100000) AS n_large,
-       round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE 0 END), 2) AS filled_value
-FROM orders GROUP BY 1
-"""
-
-
-def q_regexp_count(spark, sf):
-    """Vectorized regex hit counting over document text (JVM regexp_count
-    — the token/quality scoring primitive at corpus scale)."""
-    d = _t(spark, sf, "documents")
-    return d.select(
-        "doc_id",
-        F.regexp_count("text", F.lit(r"\bthe\b")).alias("n_the"),
-        F.regexp_count("text", F.lit(r"[0-9]+")).alias("n_numbers"),
-        F.regexp_count("text", F.lit(r"[.!?]")).alias("n_sentence_marks"),
-    )
-
-SQL_REGEXP_COUNT = r"""
-SELECT doc_id,
-       len(regexp_extract_all(text, '\bthe\b')) AS n_the,
-       len(regexp_extract_all(text, '[0-9]+')) AS n_numbers,
-       len(regexp_extract_all(text, '[.!?]')) AS n_sentence_marks
-FROM documents
 """
 
 

@@ -1,32 +1,12 @@
 """Declared StructType constants — schemas are fixed, never inferred.
 
-The corpus schema is mandated verbatim by BASELINE.json input_hint:
-(image_id:string, bytes:binary, w:int32, h:int32, fmt:string,
- caption:string, phash:int64).
+One declaration per crawl table; the engine's catalog, its driver-side
+writes and its readers all bind to these.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-CORPUS = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("bytes", T.BinaryType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("h", T.IntegerType(), False),
-        T.StructField("fmt", T.StringType(), False),
-        T.StructField("caption", T.StringType(), False),
-        T.StructField("phash", T.LongType(), False),
-    ]
-)
-
-URLS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("image_id", T.StringType(), False),
-    ]
-)
 
 ROBOTS = T.StructType(
     [
@@ -74,6 +54,32 @@ CRAWL_LOG = T.StructType(
         T.StructField("discovered_seq", T.LongType(), False),
         # kept | dup_exact | neardup_image | neardup_caption
         T.StructField("status", T.StringType(), False),
+    ]
+)
+
+# image_id → canonical URL parts, written once by init_state
+URL_MAP = T.StructType(
+    [
+        T.StructField("image_id", T.StringType()),
+        T.StructField("canon_url", T.StringType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("path", T.StringType()),
+    ]
+)
+
+# the fetched rows that are not exact duplicates, appended per round:
+# the attributes the near-dup residual filters read, plus the caption
+# MinHash bands
+SURVIVORS = T.StructType(
+    [
+        T.StructField("fetch_seq", T.LongType()),
+        T.StructField("image_id", T.StringType()),
+        T.StructField("w", T.IntegerType()),
+        T.StructField("h", T.IntegerType()),
+        T.StructField("phash", T.LongType()),
+        T.StructField("caption", T.StringType()),
+        T.StructField("content_sha", T.StringType()),
+        T.StructField("bands", T.ArrayType(T.LongType())),
     ]
 )
 

@@ -47,6 +47,12 @@ class ManifestCatalog:
         # version allocation is locked; the parquet write itself runs
         # unlocked — paths are unique per (name, version).
         self._lock = threading.Lock()
+        # the staging ledger of the open commit window: stage-table
+        # versions, append parts and replace parts written since the
+        # last commit (commit publishes them, then clears them)
+        self._staged: dict[str, int] = {}
+        self._staged_appends: dict[str, list[int]] = {}
+        self._staged_replaces: dict[str, int] = {}
         self.manifest: dict = {"round": -1, "versions": {}, "appends": {}, "counters": {}}
         mpath = os.path.join(run_dir, "manifest.json")
         if os.path.exists(mpath):
@@ -173,7 +179,7 @@ class ManifestCatalog:
         equivalent is reading the snapshot's manifest row counts."""
         import pyarrow.parquet as pq
 
-        v = getattr(self, "_staged", {}).get(name, self.manifest["versions"].get(name))
+        v = self._staged.get(name, self.manifest["versions"].get(name))
         if v is None:
             raise KeyError(f"table {name!r} has no staged or committed version")
         path = os.path.join(self.tables_dir, name, f"v{v}")
@@ -190,9 +196,7 @@ class ManifestCatalog:
     def stage(self, name: str, df: DataFrame, partitions: int | None = None) -> int:
         """Write a new version of ``name``; becomes visible only at commit."""
         v = self._next_stage_version(name)
-        path = os.path.join(self.tables_dir, name, f"v{v}")
-        w = df.coalesce(partitions) if partitions else df
-        w.write.mode("overwrite").parquet(path)
+        self._write_df(name, v, df, partitions)
         return v
 
     def stage_local(self, name: str, table) -> int:
@@ -204,7 +208,6 @@ class ManifestCatalog:
 
     def _next_stage_version(self, name: str) -> int:
         with self._lock:
-            self._staged = getattr(self, "_staged", {})
             v = int(self._staged.get(name, self.manifest["versions"].get(name, -1))) + 1
             self._staged[name] = v
         return v
@@ -212,23 +215,23 @@ class ManifestCatalog:
     def append(self, name: str, df: DataFrame, partitions: int | None = None) -> int:
         """Append-only table: write ONLY the delta as a new part (Iceberg
         append semantics — no rewrite amplification for logs/metrics/seen)."""
-        with self._lock:
-            self._staged_appends = getattr(self, "_staged_appends", {})
-            staged = self._staged_appends
-            v = self._next_part_version(name, staged)
-            staged.setdefault(name, []).append(v)
-        path = os.path.join(self.tables_dir, name, f"v{v}")
-        w = df.coalesce(partitions) if partitions else df
-        w.write.mode("overwrite").parquet(path)
+        v = self._next_append_version(name)
+        self._write_df(name, v, df, partitions)
         return v
 
-    def _next_part_version(self, name: str, staged: dict) -> int:
+    def _next_append_version(self, name: str) -> int:
+        with self._lock:
+            v = self._next_part_version(name)
+            self._staged_appends.setdefault(name, []).append(v)
+        return v
+
+    def _next_part_version(self, name: str) -> int:
         """Next free part version for an append table, counting committed
         parts, staged appends AND any staged replace — a replace followed
         by an append in the same commit window must not reuse v."""
-        repl = getattr(self, "_staged_replaces", {}).get(name)
+        repl = self._staged_replaces.get(name)
         cands = (self.manifest["appends"].get(name, [])
-                 + staged.get(name, [])
+                 + self._staged_appends.get(name, [])
                  + ([repl] if repl is not None else []))
         return (max(cands) + 1) if cands else 0
 
@@ -238,15 +241,9 @@ class ManifestCatalog:
         (Iceberg overwrite-snapshot semantics). Needed by recrawl-window
         eviction — the seen set SHRINKS, which appends cannot express."""
         with self._lock:
-            self._staged_replaces = getattr(self, "_staged_replaces", {})
-            cands = (self.manifest["appends"].get(name, [])
-                     + getattr(self, "_staged_appends", {}).get(name, [])
-                     + ([self._staged_replaces[name]] if name in self._staged_replaces else []))
-            v = (max(cands) + 1) if cands else 0
+            v = self._next_part_version(name)
             self._staged_replaces[name] = v
-        path = os.path.join(self.tables_dir, name, f"v{v}")
-        w = df.coalesce(partitions) if partitions else df
-        w.write.mode("overwrite").parquet(path)
+        self._write_df(name, v, df, partitions)
         return v
 
     def append_local(self, name: str, table) -> int:
@@ -254,13 +251,15 @@ class ManifestCatalog:
         Spark job — for per-round literal frames (metrics rows, already
         collected) where a distributed write is pure fixed cost. The
         Iceberg twin appends the same tiny batch through writeTo()."""
-        with self._lock:
-            self._staged_appends = getattr(self, "_staged_appends", {})
-            staged = self._staged_appends
-            v = self._next_part_version(name, staged)
-            staged.setdefault(name, []).append(v)
+        v = self._next_append_version(name)
         self._write_local(name, v, table)
         return v
+
+    def _write_df(self, name: str, v: int, df: DataFrame,
+                  partitions: int | None) -> None:
+        path = os.path.join(self.tables_dir, name, f"v{v}")
+        w = df.coalesce(partitions) if partitions else df
+        w.write.mode("overwrite").parquet(path)
 
     def _write_local(self, name: str, v: int, table) -> None:
         import pyarrow.parquet as pq
@@ -317,9 +316,8 @@ class ManifestCatalog:
         # then silently drop them (append → merge → commit loses the
         # append). Refuse rather than quietly lose data — commit first,
         # then merge.
-        staged_here = (name in getattr(self, "_staged", {})
-                       or name in getattr(self, "_staged_appends", {})
-                       or name in getattr(self, "_staged_replaces", {}))
+        staged_here = (name in self._staged or name in self._staged_appends
+                       or name in self._staged_replaces)
         if staged_here:
             raise RuntimeError(
                 f"merge({name!r}): table has staged uncommitted writes; a "
@@ -329,7 +327,7 @@ class ManifestCatalog:
         kept = target.join(source.select(*on).dropDuplicates(on),
                            on=on, how="left_anti")
         merged = kept.unionByName(source.select(*target.columns))
-        staged = name in self.manifest["versions"] or name in getattr(self, "_staged", {})
+        staged = name in self.manifest["versions"] or name in self._staged
         writer = self.stage if staged else self.replace
         return writer(name, merged, partitions=partitions)
 
@@ -377,11 +375,11 @@ class ManifestCatalog:
                 referenced.add((name, int(v)))
             for name, vs in m.get("appends", {}).items():
                 referenced.update((name, int(v)) for v in vs)
-        for name, v in getattr(self, "_staged", {}).items():
+        for name, v in self._staged.items():
             referenced.add((name, int(v)))
-        for name, vs in getattr(self, "_staged_appends", {}).items():
+        for name, vs in self._staged_appends.items():
             referenced.update((name, int(v)) for v in vs)
-        for name, v in getattr(self, "_staged_replaces", {}).items():
+        for name, v in self._staged_replaces.items():
             referenced.add((name, int(v)))
         removed = 0
         for name in os.listdir(self.tables_dir):
@@ -394,12 +392,11 @@ class ManifestCatalog:
         return {"expired_snapshots": len(expired), "orphans_removed": removed}
 
     def commit(self, round_no: int, counters: dict) -> None:
-        staged = getattr(self, "_staged", {})
-        self.manifest["versions"].update(staged)
-        for name, vs in getattr(self, "_staged_appends", {}).items():
+        self.manifest["versions"].update(self._staged)
+        for name, vs in self._staged_appends.items():
             self.manifest["appends"].setdefault(name, []).extend(vs)
         self._staged_appends = {}
-        for name, v in getattr(self, "_staged_replaces", {}).items():
+        for name, v in self._staged_replaces.items():
             self.manifest["appends"][name] = [v]  # compaction wins
         self._staged_replaces = {}
         self.manifest["round"] = round_no

@@ -96,9 +96,7 @@ def stateful_seen_filter_stream(
         # state = BINARY-packed int64 hash array (8 bytes/URL, zero
         # parsing) — membership and in-batch first-occurrence are
         # vectorized numpy ops, no per-row Python. The value-state API
-        # still rewrites the whole blob per micro-batch per key; the
-        # per-key MapState that removes even that is the TWS variant
-        # below (stateful_seen_filter_tws, protobuf-gated here).
+        # still rewrites the whole blob per micro-batch per key.
         import numpy as np
 
         seen = (np.frombuffer(state.get[0], dtype=np.int64)
@@ -205,74 +203,6 @@ def streaming_round_demo(
         ckpt,
     )
     return spark.read.parquet(dest)
-
-
-def stateful_seen_filter_tws(
-    spark: SparkSession, urls_dir: str, out_dir: str, n_groups: int = 16,
-) -> DataFrame:
-    """ST4 on the Spark 4 state API: the same exact streaming seen-set
-    as stateful_seen_filter_stream, but via transformWithStateInPandas
-    with typed MapState — the successor API whose state store handles
-    per-key layout (no string-packed blobs) and supports timers/TTL for
-    recrawl-window eviction at scale.
-
-    Requires the `protobuf` python package (the TWS runner's wire
-    format), which is not installed in every environment — gated with a
-    clear error; stateful_seen_filter_stream is the portable path."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas needs the `protobuf` python "
-            "package (absent here); use stateful_seen_filter_stream"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class SeenSetProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.seen = handle.getMapState(
-                "seen",
-                StructType([StructField("h", LongType())]),        # key
-                StructType([StructField("dummy", LongType())]),    # value
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            for pdf in rows:
-                out_h, out_u = [], []
-                for h, u in zip(pdf["url_hash"], pdf["canon_url"]):
-                    k = (int(h),)
-                    if not self.seen.containsKey(k):
-                        self.seen.updateValue(k, (1,))
-                        out_h.append(int(h))
-                        out_u.append(u)
-                if out_h:
-                    yield pd.DataFrame({"url_hash": out_h, "canon_url": out_u})
-
-        def close(self) -> None:
-            pass
-
-    schema = spark.read.parquet(urls_dir).schema
-    result = (
-        _stream_parquet(spark, urls_dir, schema)
-        .withColumn("grp", F.pmod(F.col("url_hash"), F.lit(n_groups)))
-        .groupBy("grp")
-        .transformWithStateInPandas(
-            SeenSetProcessor(),
-            outputStructType="url_hash long, canon_url string",
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-    ckpt = os.path.join(out_dir, "_ckpt")
-    _run_available_now(
-        result.writeStream.format("parquet").outputMode("append")
-        .option("path", os.path.join(out_dir, "data")),
-        ckpt,
-    )
-    return spark.read.parquet(os.path.join(out_dir, "data"))
 
 
 def stream_export_shards(
