@@ -2,6 +2,7 @@
 invariants must match the reference oracle 100%, and runs must be
 resumable from snapshot with identical results."""
 
+import json
 import os
 import shutil
 
@@ -78,6 +79,11 @@ def test_kept_rows_per_row_invariant(engine_and_oracle, fix_dir):
         assert imagecodec.psnr(dec, ref_dec) >= 40.0 or np.array_equal(dec, ref_dec)
 
 
+def _scratch_parts(cat):
+    d = cat.scratch_dir
+    return sorted(os.listdir(d)) if os.path.isdir(d) else []
+
+
 def test_resume_equals_uninterrupted(spark, fix_dir, tmp_path_factory, engine_and_oracle):
     eng_full, _ = engine_and_oracle
     run_dir = str(tmp_path_factory.mktemp("resume"))
@@ -96,8 +102,36 @@ def test_resume_equals_uninterrupted(spark, fix_dir, tmp_path_factory, engine_an
         declared = e1.cat.table_schemas[name]
         assert ([(f.name, f.dataType) for f in footer]
                 == [(f.name, f.dataType) for f in declared]), name
+    # round 2 raises after its fetch scratch part and survivors part have
+    # landed; nothing of it is committed
+    crashed = CrawlEngine(spark, fix_dir, run_dir, CFG)
+    append = crashed.cat.append
+
+    def failing_append(name, df, *args):
+        if name == "crawl_log":
+            raise RuntimeError("executor lost")
+        return append(name, df, *args)
+
+    crashed.cat.append = failing_append
+    with pytest.raises(RuntimeError, match="executor lost"):
+        crashed.run()
+    assert crashed.cat.round == 1
+    assert _scratch_parts(crashed.cat) == ["fetch"]
     e2 = CrawlEngine(spark, fix_dir, run_dir, CFG)  # resumes rounds 2..3
+    # snapshot expiry (keeping every snapshot) sweeps the crashed round's
+    # scratch parts
+    e2.cat.expire_snapshots(len(e2.cat.rounds()))
+    assert _scratch_parts(e2.cat) == []
+    commit = e2.cat.commit
+    leftovers = []
+
+    def checked_commit(*args):
+        commit(*args)
+        leftovers.extend(_scratch_parts(e2.cat))
+
+    e2.cat.commit = checked_commit
     e2.run()
+    assert leftovers == []  # no scratch part survives a commit
     a = eng_full.cat.read("crawl_log").orderBy("fetch_seq").toPandas()
     b = e2.cat.read("crawl_log").orderBy("fetch_seq").toPandas()
     assert a.equals(b)
@@ -113,3 +147,44 @@ def test_resume_equals_uninterrupted(spark, fix_dir, tmp_path_factory, engine_an
             if fn.endswith(".parquet"):
                 got = pq.read_schema(os.path.join(d, fn))
                 assert got.equals(want), (v, fn, got)
+
+
+def test_zero_fetch_round_writes_nothing(spark, fix_dir, tmp_path):
+    """Every host is seeded, allowed everywhere and crawl-delayed two
+    rounds, so round 1 finds every frontier host throttled: it fetches
+    nothing, writes no table version and no scratch part, and the crawl
+    that goes on from it still matches the oracle."""
+    fx = str(tmp_path / "fix")
+    shutil.copytree(fix_dir, fx)
+    shutil.rmtree(os.path.join(fx, "robots_txt"))  # the engine reads robots.json
+    with open(os.path.join(fx, "robots.json")) as f:
+        robots = json.load(f)
+    with open(os.path.join(fx, "robots.json"), "w") as f:
+        json.dump({h: {"disallow": [], "allow": [], "crawl_delay": 2.0} for h in robots}, f)
+    cfg = CrawlConfig(per_host_k=2, max_rounds=5, default_delay=2.0)
+    run_dir = str(tmp_path / "run")
+    e1 = CrawlEngine(spark, fx, run_dir, CrawlConfig(per_host_k=2, max_rounds=1,
+                                                     default_delay=2.0))
+    e1.run()
+
+    def tree():
+        return sorted(os.path.relpath(os.path.join(d, n), run_dir)
+                      for d, dirs, _ in os.walk(run_dir) for n in dirs)
+
+    before = tree()
+    info = e1.run_round(1)
+    assert info == {"fetched": 0, "frontier": e1.cat.staged_rowcount("frontier"),
+                    "stopped": False}
+    assert info["frontier"] > 0
+    assert tree() == before
+    e2 = CrawlEngine(spark, fx, run_dir, cfg)
+    e2.run()
+    res = crawl(fx, cfg)
+    elog = e2.cat.read("crawl_log").orderBy("fetch_seq").toPandas()
+    assert sorted(set(elog["round"])) == sorted(set(res.crawl_log["round"]))
+    assert 1 not in set(elog["round"])
+    m = elog.merge(res.crawl_log, on="fetch_seq", suffixes=("_e", "_o"))
+    assert len(m) == len(elog) == len(res.crawl_log)
+    for c in LOG_COLS:
+        assert (m[f"{c}_e"] == m[f"{c}_o"]).all(), c
+    assert {r.canon_url for r in e2.cat.read("seen").collect()} == res.seen

@@ -10,6 +10,7 @@ import pytest
 
 from web_crawler_spark.config import CrawlConfig
 from web_crawler_spark.plans.crawl import CrawlEngine
+from web_crawler_spark.sources.catalog import ManifestCatalog
 
 LOG_COLS = ["round", "canon_url", "host", "image_id", "priority",
             "discovered_seq", "status"]
@@ -121,3 +122,20 @@ def test_resume_across_maintenance(spark, fix_dir, tmp_path_factory, runs):
     resumed = CrawlEngine(spark, fix_dir, run_dir, CFG_MAINT)
     resumed.run()
     assert _log(resumed).equals(_log(maint))
+
+
+def test_scratch_parts_live_until_commit(spark, tmp_path):
+    """A scratch part reads back with its footer row count, survives
+    snapshot expiry while its round is open, is deleted by the commit,
+    and a crashed round's leftover is swept by the next expiry."""
+    cat = ManifestCatalog(spark, str(tmp_path))
+    df, n = cat.scratch("x", spark.range(7))
+    assert n == 7 and sorted(r.id for r in df.collect()) == list(range(7))
+    cat.expire_snapshots(1)
+    assert os.listdir(cat.scratch_dir) == ["x"]
+    cat.commit(0, {})
+    assert not os.path.exists(cat.scratch_dir)
+    cat.scratch("y", spark.range(3))  # this round never commits
+    restarted = ManifestCatalog(spark, str(tmp_path))
+    assert restarted.expire_snapshots(1)["orphans_removed"] == 1
+    assert os.listdir(restarted.scratch_dir) == []

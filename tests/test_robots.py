@@ -2,6 +2,7 @@
 selection, longest-match Allow/Disallow, and the Spark ingestion paths."""
 
 import pandas as pd
+from hypothesis import given, settings, strategies as st
 
 from web_crawler_spark.core.web import robots_allowed
 from web_crawler_spark.sources.robots import (
@@ -10,6 +11,7 @@ from web_crawler_spark.sources.robots import (
     load_sitemaps,
     parse_robots_txt,
     parse_sitemap_xml,
+    sitemap_locs,
 )
 
 
@@ -141,3 +143,30 @@ def test_spark_ingestion_matches_fixture_json(spark, fix_dir):
         assert dis == want[host]["disallow"], host
         assert allow == want[host]["allow"], host
         assert delay == float(want[host]["crawl_delay"]), host
+
+
+# XML whitespace, other ASCII whitespace, and Unicode whitespace that
+# Python's \s matches and Java's does not
+_WS = " \t\r\n\u00a0\u2003\u3000\u0085\x0b\x0c\x1c"
+_ws_st = st.text(alphabet=_WS, max_size=3)
+_body_st = st.text(
+    alphabet=st.one_of(st.sampled_from(_WS), st.characters(
+        exclude_characters="<", exclude_categories=("Cs",))),
+    min_size=1, max_size=12)
+_entry_st = st.one_of(
+    st.builds(lambda a, u, b: f"<url><loc>{a}{u}{b}</loc></url>", _ws_st, _body_st, _ws_st),
+    st.sampled_from(["\n  ", "<urlset>", "</urlset>", "<loc></loc>", "<loc>", "</loc>",
+                     "<loc> \u00a0 </loc>", "<loc>\u2003</loc>"]),
+)
+_doc_st = st.lists(_entry_st, max_size=6).map("".join)
+
+
+@given(docs=st.lists(_doc_st, min_size=1, max_size=8))
+@settings(max_examples=25, derandomize=True, deadline=None)
+def test_sitemap_locs_jvm_equals_python(spark, docs):
+    """load_sitemaps' JVM extraction and the oracle's parser return
+    identical <loc> lists, whatever whitespace surrounds the entries."""
+    df = spark.createDataFrame(pd.DataFrame({"i": range(len(docs)), "value": docs}))
+    got = [list(r.locs) for r in
+           df.select("i", sitemap_locs("value").alias("locs")).orderBy("i").collect()]
+    assert got == [parse_sitemap_xml(d) for d in docs]

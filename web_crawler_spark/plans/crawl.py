@@ -32,6 +32,15 @@ Scale design (10^10-URL frontier; sandbox runs are scaled down):
   unpartitioned window. One round's discoveries at 10^10 scale are
   billions of rows; a single-partition window there is the canonical
   scale-killer.
+- A round is a chain of durable barriers, not one DAG of cached frames:
+  fetch → survivors → crawl_log → new discoveries each land once as
+  parquet (the table part the round appends anyway, or a catalog scratch
+  part its commit deletes) and later steps scan them back. Spark expands
+  a cached frame inline once per reference in every plan and every plan
+  string AQE posts, so stacked caches made the driver, not the data, the
+  round's cost. Unlike an executor-local cut of the lineage, a parquet
+  part survives a lost executor: the next job re-reads it instead of
+  recomputing.
 """
 
 from __future__ import annotations
@@ -40,7 +49,7 @@ import json
 import os
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from web_crawler_spark import schemas
@@ -57,18 +66,6 @@ from web_crawler_spark.sources import robots as robots_src
 from web_crawler_spark.sources.catalog import ManifestCatalog
 
 SURVIVOR_COLS = schemas.SURVIVORS.fieldNames()
-
-
-def _obs_val(obs: Observation, key: str, fallback) -> int:
-    """Read an Observation metric, falling back to ``fallback()`` (a
-    count over the already-cached frame — instant) when the observed
-    subtree never executed: AQE's empty-relation propagation can prune
-    the plan below an empty shuffle stage, eliminating the
-    CollectMetrics node, and Observation.get then raises."""
-    try:
-        return int(obs.get[key])
-    except Exception:
-        return int(fallback())
 
 
 def _metrics_arrow(rows: list[tuple]):
@@ -311,7 +308,7 @@ class CrawlEngine:
             F.col("id").alias("host"),
             F.floor(F.col("rank") * F.lit(1e6) + F.lit(0.5)).cast("long").alias("rank_q"),
         )
-        # pagerank_df already ran its (checkpointed) iterations; caching
+        # pagerank_df already ran its (lineage-truncated) iterations; caching
         # the small host-level result frame makes later rounds between
         # refreshes reuse it without re-running the power iteration
         self._rank_cache = (through_round, out)
@@ -416,42 +413,48 @@ class CrawlEngine:
                        if cfg.priority_mode == "authority" and rank_round > 0
                        and int(ctr["next_fetch_seq"]) > 0 else None),
         )
-
-        # -- fetch: frontier batch ⋈ url_map ⋈ corpus (the sandbox's HTTP GET)
-        # n_fetched rides an Observation on the first deep action below
-        # (new.agg) instead of a dedicated count job per superstep.
         # url_map is static after init — read once, cache across rounds
         if self._ulm is None:
             self._ulm = cat.read("url_map").persist()
         url_map = self._ulm
-        fetch_obs = Observation(f"fetch_r{r}")
-        fetched = (
+
+        # every frame a later step reuses is read back from parquet (see
+        # the module docstring); the round's only cache is ``sel``, built
+        # on committed table scans alone
+
+        # -- fetch: frontier batch ⋈ url_map ⋈ corpus (the sandbox's HTTP GET)
+        fetched, n_fetched = cat.scratch("fetch", (
             batch.join(url_map.select("image_id", "canon_url"), "canon_url", "inner")
             .join(self.corpus, "image_id", "inner")
             # bytes re-joined only for candidate PAIRS (scale: §4.4)
             .selectExpr("* EXCEPT (bytes)", "sha2(bytes, 256) AS content_sha")
-            .observe(fetch_obs, F.count(F.lit(1)).alias("n"))
-            .persist()
-        )
+        ))
+        if n_fetched == 0:
+            # politeness-stalled round: the committed snapshot already is
+            # the next state, so write no table at all
+            sel.unpersist()
+            cat.discard_scratch()
+            n_frontier = cat.staged_rowcount("frontier")
+            return {"fetched": 0, "frontier": n_frontier, "stopped": n_frontier == 0}
 
-        # -- exact dedup: first-writer-wins per content hash, global order
-        prior_sha = cat.read("survivors").select("content_sha").distinct()
-        fx = (
+        # -- exact dedup: first-writer-wins per content hash, global order.
+        # The survivors part this round appends IS the batch's survivor
+        # frame: the near-dup steps below scan it back.
+        prior_surv = cat.read("survivors")
+        fresh = (
             fetched.selectExpr(
                 "*", "row_number() OVER (PARTITION BY content_sha "
                      "ORDER BY fetch_seq) AS sha_rn")
-            .join(prior_sha.selectExpr("content_sha", "true AS in_prior"),
+            .join(prior_surv.select("content_sha").distinct()
+                  .selectExpr("content_sha", "true AS in_prior"),
                   "content_sha", "left")
-            .selectExpr("* EXCEPT (in_prior, sha_rn)",
-                        "(in_prior IS NOT NULL OR sha_rn > 1) AS is_exact_dup")
+            .where("in_prior IS NULL AND sha_rn = 1")
         )
-        batch_surv = (
-            fx.where("NOT is_exact_dup")
-            .select(*[caption_bands_udf("caption").alias("bands")
-                      if c == "bands" else c for c in SURVIVOR_COLS])
-            .persist()
-        )
-        prior_surv = cat.read("survivors")
+        batch_surv = cat.read_part("survivors", cat.append(
+            "survivors",
+            fresh.select(*[caption_bands_udf("caption").alias("bands")
+                           if c == "bands" else c for c in SURVIVOR_COLS]),
+            1))
         all_surv = prior_surv.unionByName(batch_surv)
 
         # -- LSH band INDEX tables: pre-exploded postings, appended per
@@ -472,6 +475,10 @@ class CrawlEngine:
         bands_idx = cat.read("bands")
         pidx = bands_idx.filter(F.col("kind") == "p").drop("kind").unionByName(batch_pb)
         cidx = bands_idx.filter(F.col("kind") == "c").drop("kind").unionByName(batch_cb)
+        bands_add = (
+            batch_pb.withColumn("kind", F.lit("p"))
+            .unionByName(batch_cb.withColumn("kind", F.lit("c")))
+        )
 
         _ATTR_SRC = {"seq": "fetch_seq", "id": "image_id", "w": "w",
                      "h": "h", "phash": "phash", "caption": "caption"}
@@ -528,187 +535,137 @@ class CrawlEngine:
             .selectExpr("x_seq AS fetch_seq").distinct()
         )
 
-        # -- statuses (priority: dup_exact > neardup_image > neardup_caption)
-        statused = (
-            fx.join(img_dups.selectExpr("fetch_seq", "true AS is_img_dup"),
-                    "fetch_seq", "left")
+        # -- statuses (priority: dup_exact > neardup_image > neardup_caption);
+        # a fetched row is an exact dup iff it did not survive. Kept rows
+        # are NOT materialized as their own table: they are the survivors
+        # the log marks 'kept' (see images_kept())
+        log_add = (
+            fetched.join(batch_surv.selectExpr("fetch_seq", "true AS is_surv"),
+                         "fetch_seq", "left")
+            .join(img_dups.selectExpr("fetch_seq", "true AS is_img_dup"),
+                  "fetch_seq", "left")
             .join(cap_dups.selectExpr("fetch_seq", "true AS is_cap_dup"),
                   "fetch_seq", "left")
-            .selectExpr(
-                "*",
-                "CASE WHEN is_exact_dup THEN 'dup_exact' "
-                "WHEN is_img_dup IS NOT NULL THEN 'neardup_image' "
-                "WHEN is_cap_dup IS NOT NULL THEN 'neardup_caption' "
-                "ELSE 'kept' END AS status")
-            .persist()
+            .select(
+                "fetch_seq", F.lit(r).alias("round"), "canon_url", "host", "image_id",
+                "priority", "discovered_seq",
+                F.expr("CASE WHEN is_surv IS NULL THEN 'dup_exact' "
+                       "WHEN is_img_dup IS NOT NULL THEN 'neardup_image' "
+                       "WHEN is_cap_dup IS NOT NULL THEN 'neardup_caption' "
+                       "ELSE 'kept' END").alias("status"))
         )
-        # no explicit materialization: the new.agg action below scans
-        # disc ← links ← statused, populating the persisted statused en
-        # route (one deep job instead of two)
-        log_add = statused.select(
-            "fetch_seq", F.lit(r).alias("round"), "canon_url", "host", "image_id",
-            "priority", "discovered_seq", "status",
-        )
-        # kept rows are NOT materialized as their own table: they are the
-        # survivors the log marks 'kept' (see images_kept()) — one fewer
-        # append job per superstep
+        # the crawl_log part this round appends stands in for the status
+        # frame: politeness, discovery and metrics read only its columns
+        # (plus the frontier bucket, a pure function of host and URL)
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            futs = [ex.submit(cat.append, "bands", bands_add, 1)]
+            log_part = cat.read_part("crawl_log", cat.append("crawl_log", log_add, 1))
 
-        # -- politeness clocks: per HOST (re-aggregated across salt buckets)
-        fetched_hosts = statused.select("host").distinct()
-        hn_new = (
-            fetched_hosts.join(F.broadcast(self.robots.select("host", "crawl_delay")), "host", "left")
-            .selectExpr(
-                "host",
-                f"cast({r + 1} + ceil(coalesce(crawl_delay, "
-                f"{cfg.default_delay!r})) AS int) AS next_round")
-        )
-        host_next2 = (
-            host_next.unionByName(hn_new).groupBy("host")
-            .agg(F.max("next_round").alias("next_round"))
-        )
+            # -- politeness clocks: per HOST (re-aggregated across salt buckets)
+            hn_new = (
+                log_part.select("host").distinct()
+                .join(F.broadcast(self.robots.select("host", "crawl_delay")), "host", "left")
+                .selectExpr(
+                    "host",
+                    f"cast({r + 1} + ceil(coalesce(crawl_delay, "
+                    f"{cfg.default_delay!r})) AS int) AS next_round")
+            )
+            futs.append(ex.submit(cat.stage, "host_next", (
+                host_next.unionByName(hn_new).groupBy("host")
+                .agg(F.max("next_round").alias("next_round")))))
 
-        # -- discoveries: link UDTF (JVM-side pure function) → canon → seen/robots
-        targets = link_targets_expr(F.col("image_id"), self.n_corpus)
-        links = (
-            statused.select("fetch_seq", "priority", F.posexplode(targets).alias("link_pos", "target"))
-            .withColumn("t_image_id", F.concat(F.lit("img-"), F.lpad(F.col("target").cast("string"), 8, "0")))
-        )
-        disc_obs = Observation(f"disc_r{r}")
-        disc = links.join(url_map, links.t_image_id == url_map.image_id, "inner").select(
-            "fetch_seq", "link_pos", "priority", "canon_url", "host", "path",
-            F.xxhash64("canon_url").alias("url_hash"),
-        ).observe(disc_obs, F.count(F.lit(1)).alias("n")).persist()
-
-        first = disc.selectExpr(
-            "*", "row_number() OVER (PARTITION BY url_hash, canon_url "
-                 "ORDER BY fetch_seq, link_pos) AS rn").where("rn = 1").drop("rn")
-        seen_tbl = cat.read("seen").select("url_hash", "canon_url")
-        new = filter_new_urls(
-            first, seen_tbl,
-            maybe_udf=self._sketch_udf() if cfg.bloom_prefilter else None)
-        new = (
-            new.join(F.broadcast(self.robots.select("host", "disallow", "allow")),
-                     "host", "left")
-            .withColumn(
-                "allowed",
-                robots_src.allowed_expr(F.col("path"), F.col("disallow"), F.col("allow")),
-            ).persist()
-        )
-        seen_add = new.select("canon_url", "url_hash")
-        bands_add = (
-            batch_pb.withColumn("kind", F.lit("p"))
-            .unionByName(batch_cb.withColumn("kind", F.lit("c")))
-        )
-
-        # -- metrics with per-partition (bucket) lineage. The distributed
-        # agg runs over the CACHED statused rows (one count_if pass, no
-        # pivot); the per-bucket result is tiny (≤ n_buckets rows) so it
-        # is collected and appended as a literal frame — two fewer deep
-        # write-jobs per superstep.
-        _is = lambda s: F.count_if(F.col("status") == s)
-
-        def _collect_and_append_metrics(n_new, n_allowed, n_links):
-            # runs inside the parallel write pool: the per-bucket agg is
-            # a small job over the CACHED statused rows, and the append
-            # is a driver-side literal write — overlaps the table writes
-            bucket_rows = (
-                statused.groupBy("bucket")
+            # -- metrics with per-partition (bucket) lineage: one count_if
+            # pass over the log part; the ≤ n_buckets result rows are
+            # collected and appended driver-side once the round's link
+            # counts are in
+            _is = lambda s: F.count_if(F.col("status") == s)
+            bucket_rows_fut = ex.submit(lambda: (
+                log_part.groupBy(_bucket(F.col("host"), F.col("canon_url"), cfg)
+                                 .alias("bucket"))
                 .agg(F.count("*").alias("fetched"), _is("kept").alias("kept"),
                      _is("dup_exact").alias("dup_exact"),
                      _is("neardup_image").alias("neardup_image"),
                      _is("neardup_caption").alias("neardup_caption"))
-                .collect()
+                .collect()))
+
+            # -- discoveries: link UDTF (JVM-side pure function) → canon → seen/robots
+            targets = link_targets_expr(F.col("image_id"), self.n_corpus)
+            links = (
+                log_part.select("fetch_seq", "priority",
+                                F.posexplode(targets).alias("link_pos", "target"))
+                .withColumn("t_image_id", F.concat(
+                    F.lit("img-"), F.lpad(F.col("target").cast("string"), 8, "0")))
             )
+            disc = links.join(url_map, links.t_image_id == url_map.image_id, "inner").select(
+                "fetch_seq", "link_pos", "priority", "canon_url", "host", "path",
+                F.xxhash64("canon_url").alias("url_hash"),
+            )
+            n_links_fut = ex.submit(disc.count)
+            first = disc.selectExpr(
+                "*", "row_number() OVER (PARTITION BY url_hash, canon_url "
+                     "ORDER BY fetch_seq, link_pos) AS rn").where("rn = 1").drop("rn")
+            seen_tbl = cat.read("seen").select("url_hash", "canon_url")
+            new = filter_new_urls(
+                first, seen_tbl,
+                maybe_udf=self._sketch_udf() if cfg.bloom_prefilter else None)
+            new, n_new = cat.scratch("new", (
+                new.join(F.broadcast(self.robots.select("host", "disallow", "allow")),
+                         "host", "left")
+                .select("fetch_seq", "link_pos", "priority", "canon_url", "url_hash",
+                        "host", robots_src.allowed_expr(
+                            F.col("path"), F.col("disallow"), F.col("allow")
+                        ).alias("allowed"))
+            ))
+            seen_fut = ex.submit(cat.append, "seen", new.select("canon_url", "url_hash"), 1)
+
+            # two-phase discovered_seq over (fetch_seq, link_pos): range-
+            # buckets of fetch_seq are a monotone coarsening of the
+            # discovery order — one round's new links can be billions of
+            # rows at frontier scale, so no unpartitioned window here.
+            # The bucket WIDTH is a fixed 4096 fetch_seqs: with_global_seq's
+            # output is independent of the granularity (any width yields
+            # the same total order). The offset pass is O(B²) additions in
+            # one task over the bucket count B, so the width must keep B
+            # in the low thousands at the design point: ~2.4k buckets at
+            # 10^7-fetch rounds (a width of 64 would give ~156k buckets,
+            # ~1.2e10 additions). Windows stay ≤ 4096×fan-out rows.
+            fb = 4096
+            an = with_global_seq(
+                new.filter("allowed").withColumn(
+                    "_fb",
+                    ((F.col("fetch_seq") - F.lit(int(ctr["next_fetch_seq"])))
+                     / F.lit(fb)).cast("long")),
+                ["_fb"], ["fetch_seq", "link_pos"],
+                "discovered_seq", start=int(ctr["next_seq"]),
+            )
+            frontier_add = an.select(
+                "canon_url",
+                "url_hash",
+                "host",
+                _bucket(F.col("host"), F.col("canon_url"), cfg).alias("bucket"),
+                (F.col("priority") + 1).alias("priority"),
+                "discovered_seq",
+                F.lit(r + 1).alias("ready_round"),
+            )
+            # frontier lands coalesced (content is what matters; at
+            # cluster scale the stage would bucket-partition by the
+            # salted host hash for co-located reads — locally that extra
+            # shuffle per round is pure overhead). The anti-join reads the
+            # cached selection (batch's rows, without re-running
+            # with_global_seq's sequence subplan).
+            futs.append(ex.submit(cat.stage, "frontier", (
+                frontier.join(sel.select("discovered_seq"), "discovered_seq", "left_anti")
+                .unionByName(frontier_add)), 8))
+            n_allowed = new.where("allowed").count()
+            n_links = n_links_fut.result()
             cat.append_local("metrics", _metrics_arrow(
                 [(r, int(b["bucket"]), int(b["fetched"]), int(b["kept"]),
                   int(b["dup_exact"]), int(b["neardup_image"]),
-                  int(b["neardup_caption"]), 0, 0) for b in bucket_rows]
+                  int(b["neardup_caption"]), 0, 0) for b in bucket_rows_fut.result()]
                 + [(r, -1, 0, 0, 0, 0, 0,
                     int(n_new - n_allowed), int(n_links - n_new))],
             ))
-
-        # -- overlapped action phase (r4, VERDICT r3 #6; widened r5): of
-        # the seven per-round jobs only metrics needs the counting agg's
-        # outputs — the SIX table writes (frontier included, now that its
-        # sequence buckets use a fixed width instead of n_fetched) depend
-        # solely on committed state plus the cached frames. Submit all six
-        # immediately and run the counting agg CONCURRENTLY in the main
-        # thread: the round's wall cost drops from agg + writes + frontier
-        # to ~max(agg, writes). The agg job's scan of `new` still fires
-        # both Observations (no dedicated count jobs); cache races between
-        # the concurrent jobs are benign (first materialization wins, the
-        # rest read it). Snapshot visibility still flips atomically at
-        # commit() — staged writes of a zero-fetch round are empty
-        # frames (or, for frontier, byte-identical content) that a later
-        # commit may include harmlessly.
-        allowed_new = new.filter("allowed")
-        # two-phase discovered_seq over (fetch_seq, link_pos): range-
-        # buckets of fetch_seq are a monotone coarsening of the
-        # discovery order — one round's new links can be billions of
-        # rows at frontier scale, so no unpartitioned window here.
-        # The bucket WIDTH is a fixed 4096 fetch_seqs: with_global_seq's
-        # output is independent of the granularity (any width yields the
-        # same total order), and a width that needs no n_fetched lets the
-        # frontier rewrite launch WITH the other writes instead of
-        # serializing behind the counting agg. The offset pass is O(B²)
-        # additions in one task over the bucket count B, so the width
-        # must keep B in the low thousands at the design point: ~2.4k
-        # buckets at 10^7-fetch rounds (a width of 64 would give ~156k
-        # buckets, ~1.2e10 additions). Windows stay ≤ 4096×fan-out rows.
-        fb = 4096
-        an = with_global_seq(
-            allowed_new.withColumn(
-                "_fb",
-                ((F.col("fetch_seq") - F.lit(int(ctr["next_fetch_seq"]))) / F.lit(fb)).cast("long")),
-            ["_fb"], ["fetch_seq", "link_pos"],
-            "discovered_seq", start=int(ctr["next_seq"]),
-        )
-        frontier_add = an.select(
-            "canon_url",
-            "url_hash",
-            "host",
-            _bucket(F.col("host"), F.col("canon_url"), cfg).alias("bucket"),
-            (F.col("priority") + 1).alias("priority"),
-            "discovered_seq",
-            F.lit(r + 1).alias("ready_round"),
-        )
-        frontier2 = (
-            # anti-join on the persisted sel (batch's rows, without
-            # re-running with_global_seq's sequence subplan)
-            frontier.join(sel.select("discovered_seq"), "discovered_seq", "left_anti")
-            .unionByName(frontier_add)
-        )
-        # frontier lands coalesced (content is what matters; at
-        # cluster scale the stage would bucket-partition by the
-        # salted host hash for co-located reads — locally that extra
-        # shuffle per round is pure overhead)
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            futs = [
-                ex.submit(cat.stage, "host_next", host_next2),
-                ex.submit(cat.append, "seen", seen_add, 1),
-                ex.submit(cat.append, "survivors",
-                          batch_surv.select(*SURVIVOR_COLS), 1),
-                ex.submit(cat.append, "bands", bands_add, 1),
-                ex.submit(cat.append, "crawl_log", log_add, 1),
-                # on a zero-fetch round this rewrites the frontier with
-                # byte-identical content (batch and frontier_add are both
-                # empty) — a wasted-but-harmless job on a rare round, in
-                # exchange for full overlap on every normal one
-                ex.submit(cat.stage, "frontier", frontier2, 8),
-            ]
-            _c = new.agg(F.count("*").alias("n"), F.count_if("allowed").alias("a")).first()
-            n_new, n_allowed = int(_c["n"]), int(_c["a"])
-            n_links = _obs_val(disc_obs, "n", disc.count)
-            n_fetched = _obs_val(fetch_obs, "n", fetched.count)
-            if n_fetched == 0:
-                for f in futs:
-                    f.result()
-                for df in (sel, fetched, batch_surv, statused, disc, new):
-                    df.unpersist()
-                n_frontier = cat.staged_rowcount("frontier")
-                return {"fetched": 0, "frontier": n_frontier, "stopped": n_frontier == 0}
-            futs.append(ex.submit(_collect_and_append_metrics,
-                                  n_new, n_allowed, n_links))
+            v_seen = seen_fut.result()
             for f in futs:
                 f.result()
         cat.commit(r, {
@@ -717,12 +674,12 @@ class CrawlEngine:
             "next_fetch_seq": int(ctr["next_fetch_seq"] + n_fetched),
             "budget_spent": int(ctr["budget_spent"] + n_fetched),
         })
+        sel.unpersist()
         if cfg.bloom_prefilter and n_new > 0:
-            # fold this round's delta into the sketch (distributed build,
-            # driver-side merge — the incremental path at 10^10 scale)
-            self._sketch_absorb(seen_add)
-        for df in (sel, fetched, batch_surv, statused, disc, new):
-            df.unpersist()
+            # fold this round's delta (its committed seen part) into the
+            # sketch (distributed build, driver-side merge — the
+            # incremental path at 10^10 scale)
+            self._sketch_absorb(cat.read_part("seen", v_seen))
         # footer-only count of the just-written frontier — no Spark job
         n_frontier = cat.staged_rowcount("frontier")
         return {"fetched": n_fetched, "frontier": n_frontier, "stopped": n_frontier == 0}

@@ -10,11 +10,14 @@ Scale notes (the settings that matter at 1000 executors / 100 TB):
   overridden by AQE coalescing + explicit repartition on the frontier's
   salted host-hash buckets.
 - Plan strings capped at 128k chars (spark.sql.maxPlanStringLength).
-  Spark prints a cached plan inline once per reference, so the crawl
-  round's write plans, which nest six persisted frames, render to
-  megabytes, and AQE renders them again after every query stage (UI on
-  or off). The largest real plan (a formatted explain of the analytics
-  queries) is about 38k chars, far below the cap.
+  Spark prints a cached plan inline once per reference, and AQE renders
+  every plan again after each query stage (UI on or off). The crawl
+  round no longer stacks cached frames (it re-reads its parquet parts,
+  tests/test_round_plans.py), but init_state and user code still may:
+  a frame cached on a cached frame renders to megabytes, and the cap
+  bounds what one careless plan costs. The largest real plan (a
+  formatted explain of the analytics queries) is about 38k chars, far
+  below the cap.
 """
 
 from __future__ import annotations

@@ -10,7 +10,11 @@ so this catalog provides the same semantics over parquet directories:
   pinning one version per table plus the engine counters — readers always
   see a consistent snapshot;
 - resume = read the manifest, continue from ``round + 1``;
-- time travel = read any older ``manifest-r<k>.json``.
+- time travel = read any older ``manifest-r<k>.json``;
+- a round's reusable intermediates land as scratch parts
+  (``scratch/<name>``), read back as flat file scans and deleted when
+  the round commits — the superstep's durable barrier, so no plan ever
+  stacks one persisted frame on another.
 
 On a real cluster the same interface is backed by Iceberg
 (``writeTo(...).append()`` / snapshot-id pinned reads) — the engine code
@@ -53,6 +57,9 @@ class ManifestCatalog:
         self._staged: dict[str, int] = {}
         self._staged_appends: dict[str, list[int]] = {}
         self._staged_replaces: dict[str, int] = {}
+        # scratch parts written since the last commit
+        self.scratch_dir = os.path.join(run_dir, "scratch")
+        self._scratch: set[str] = set()
         self.manifest: dict = {"round": -1, "versions": {}, "appends": {}, "counters": {}}
         mpath = os.path.join(run_dir, "manifest.json")
         if os.path.exists(mpath):
@@ -177,16 +184,19 @@ class ManifestCatalog:
         """Row count of the most recently staged/committed version of
         ``name`` from parquet footers only — no Spark job. The Iceberg
         equivalent is reading the snapshot's manifest row counts."""
-        import pyarrow.parquet as pq
-
         v = self._staged.get(name, self.manifest["versions"].get(name))
         if v is None:
             raise KeyError(f"table {name!r} has no staged or committed version")
-        path = os.path.join(self.tables_dir, name, f"v{v}")
-        return sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path) if f.endswith(".parquet")
-        )
+        return _footer_rows(os.path.join(self.tables_dir, name, f"v{v}"))
+
+    def read_part(self, name: str, v: int) -> DataFrame:
+        """One version or part of ``name`` as written, committed or not —
+        a flat scan of the files a write of this round just landed."""
+        reader = self.spark.read
+        schema = self.table_schemas.get(name)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(os.path.join(self.tables_dir, name, f"v{v}"))
 
     @property
     def round(self) -> int:
@@ -267,6 +277,27 @@ class ManifestCatalog:
         path = os.path.join(self.tables_dir, name, f"v{v}")
         os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+    # -- round-scoped scratch parts ---------------------------------------
+    def scratch(self, name: str, df: DataFrame) -> tuple[DataFrame, int]:
+        """Land an intermediate frame of the open round as a parquet part
+        and return it read back as a flat file scan, with its row count
+        from the parquet footers (no Spark job). Later jobs of the round
+        scan the files instead of re-planning (or caching) the frame's
+        lineage, and a lost executor re-reads them instead of
+        recomputing. The part is not a table: no snapshot references
+        it, and ``commit`` (or ``discard_scratch``) deletes it."""
+        path = os.path.join(self.scratch_dir, name)
+        with self._lock:
+            self._scratch.add(name)
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path), _footer_rows(path)
+
+    def discard_scratch(self) -> None:
+        """Delete every scratch part — at commit, or when a round ends
+        without one."""
+        shutil.rmtree(self.scratch_dir, ignore_errors=True)
+        self._scratch = set()
 
     # -- schema evolution / merge ------------------------------------------
     def alter_add_columns(self, name: str, fields) -> None:
@@ -389,6 +420,12 @@ class ManifestCatalog:
                         and (name, int(fn[1:])) not in referenced):
                     shutil.rmtree(os.path.join(tdir, fn))
                     removed += 1
+        # scratch parts of a round that crashed before its commit
+        if os.path.isdir(self.scratch_dir):
+            for fn in os.listdir(self.scratch_dir):
+                if fn not in self._scratch:
+                    shutil.rmtree(os.path.join(self.scratch_dir, fn))
+                    removed += 1
         return {"expired_snapshots": len(expired), "orphans_removed": removed}
 
     def commit(self, round_no: int, counters: dict) -> None:
@@ -411,3 +448,12 @@ class ManifestCatalog:
             os.path.join(self.run_dir, f"manifest-r{round_no}.json"),
         )
         self._staged = {}
+        self.discard_scratch()
+
+
+def _footer_rows(path: str) -> int:
+    """Row count of the parquet files in ``path`` from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(os.path.join(path, f)).num_rows
+               for f in os.listdir(path) if f.endswith(".parquet"))

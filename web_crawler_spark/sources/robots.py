@@ -14,9 +14,10 @@ LONGEST matching prefix rule wins, Allow wins length ties, no match =
 allowed (RFC 9309 §2.2.2) — implemented in core/web.robots_allowed for
 the oracle and as a JVM expression (allowed_expr) for the engine.
 
-Sitemaps: `Sitemap:` lines name XML files; load_sitemaps parses
-<loc> entries (whole-file rows → pandas UDF) into (host, url, pos)
-rows the engine enqueues as depth-0 discoveries after the seed list.
+Sitemaps: `Sitemap:` lines name XML files; load_sitemaps extracts
+<loc> entries (whole-file rows → JVM regexp_extract_all, no Python
+worker) into (host, url, pos) rows the engine enqueues as depth-0
+discoveries after the seed list.
 """
 
 from __future__ import annotations
@@ -160,24 +161,32 @@ def allowed_expr(path_col: Column, disallow_col: Column, allow_col: Column) -> C
 
 # ------------------------------------------------------------- sitemaps
 
-_LOC_RE = re.compile(r"<loc>\s*([^<]+?)\s*</loc>")
+# one pattern for Python's re and Java's regex: whitespace is the XML
+# class spelled out, since \s means Unicode whitespace in Python 3 but
+# only ASCII whitespace in Java
+_LOC_PATTERN = r"<loc>[ \t\r\n]*([^<]+?)[ \t\r\n]*</loc>"
+_LOC_RE = re.compile(_LOC_PATTERN)
 
 
 def parse_sitemap_xml(text: str) -> list[str]:
     """<urlset><url><loc>…</loc></url>…</urlset> → URL list in file
-    order (position is part of the enqueue-order contract)."""
+    order (position is part of the enqueue-order contract). The oracle's
+    parser; load_sitemaps applies the same pattern JVM-side."""
     return _LOC_RE.findall(text or "")
+
+
+def sitemap_locs(text_col) -> Column:
+    """JVM twin of parse_sitemap_xml: the <loc> entries of a sitemap
+    body column as array<string>, in file order."""
+    return F.regexp_extract_all(text_col, F.lit(_LOC_PATTERN), 1)
 
 
 def load_sitemaps(spark: SparkSession, xml_dir: str) -> DataFrame:
     """<xml_dir>/<host>.xml files → DataFrame(host, url, pos): the
     depth-0 frontier feed (SURVEY.md S4 "sitemap URLs feed frontier").
-    Whole files as rows, parsed Arrow-batched; pos preserves in-file
-    order for deterministic enqueue sequencing."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def locs_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([parse_sitemap_xml(t) for t in texts])
+    Whole files as rows, <loc> entries extracted by the JVM with
+    parse_sitemap_xml's pattern; pos preserves in-file order for
+    deterministic enqueue sequencing."""
 
     if not glob.glob(os.path.join(xml_dir, "*.xml")):  # see load_robots_txt_dir
         return spark.createDataFrame([], schema="host string, url string, pos int")
@@ -187,7 +196,6 @@ def load_sitemaps(spark: SparkSession, xml_dir: str) -> DataFrame:
         .withColumn("host", F.regexp_extract("file", r"([^/]+)\.xml$", 1))
     )
     return (
-        files.withColumn("locs", locs_udf("value"))
-        .select("host", F.posexplode("locs").alias("pos", "url"))
+        files.select("host", F.posexplode(sitemap_locs("value")).alias("pos", "url"))
         .select("host", "url", "pos")
     )
