@@ -103,3 +103,12 @@ def test_host_authority_contract(crawled):
     # sorted by rank desc
     ranks = [r["rank"] for r in rows]
     assert ranks == sorted(ranks, reverse=True)
+    # degrees: distinct cross-host (src_host, dst_host) pairs, 0 on a
+    # side where the host has no edge
+    pairs = {(e["src_host"], e["dst_host"])
+             for e in reports.link_edges(crawled.cat, um, crawled.n_corpus).collect()
+             if e["src_host"] != e["dst_host"]}
+    assert {r["host"] for r in rows} == {h for p in pairs for h in p}
+    for r in rows:
+        assert r["n_out"] == sum(s == r["host"] for s, _ in pairs), r
+        assert r["n_in"] == sum(d == r["host"] for _, d in pairs), r

@@ -78,3 +78,22 @@ def test_broadcast_lexicon_plan(spark):
     plan = subword_tokenize_df(d)._jdf.queryExecution().executedPlan().toString()
     assert not plan_truncated(plan)
     assert "BroadcastHashJoin" in plan
+
+
+def test_lexicon_tail_is_shuffle_joined(spark):
+    """Only the lexicon's head (words above _HOT_WORD_OCC occurrences)
+    carries a broadcast hint: with size-based broadcasting off, the
+    head's join and the ANTI join that keeps hot words out of the tail
+    still broadcast, and the tail's join on the word plans as a shuffle
+    join."""
+    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = subword_tokenize_df(d)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, threshold)
+    assert not plan_truncated(plan)
+    assert plan.count("BroadcastHashJoin") == 2
+    assert plan.count("SortMergeJoin") == 1

@@ -284,8 +284,8 @@ class CrawlEngine:
 
         ``through_round``: rank-as-of semantics — only log rows with
         round < through_round feed the graph (authority_refresh_every:
-        round r uses through_round = r - (r % k)). The result is cached
-        in memory per through_round, so between refreshes the PageRank
+        round r uses through_round = r - (r % k)). The landed result is
+        memoized per through_round, so between refreshes the PageRank
         job doesn't rerun; the cache key is derived from r alone plus
         the committed log, making a resume recompute the identical
         rank."""
@@ -308,8 +308,8 @@ class CrawlEngine:
             F.col("id").alias("host"),
             F.floor(F.col("rank") * F.lit(1e6) + F.lit(0.5)).cast("long").alias("rank_q"),
         )
-        # pagerank_df already ran its (lineage-truncated) iterations; caching
-        # the small host-level result frame makes later rounds between
+        # pagerank_df returns a landed frame (its iterations already ran);
+        # memoizing it per through_round lets later rounds between
         # refreshes reuse it without re-running the power iteration
         self._rank_cache = (through_round, out)
         return out

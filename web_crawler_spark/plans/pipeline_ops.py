@@ -881,58 +881,62 @@ def q_sample_quota(spark, sf, k: int = 70, total: int = 201):
 
 def pagerank_df(edges: DataFrame, iters: int = 10, damping: float = 0.85,
                 src: str = "src", dst: str = "dst") -> DataFrame:
-    """Distributed PageRank over an edge list → (id, rank), the crawl
-    frontier-prioritization signal (authority-ordered fetch queues are
-    the classic upgrade over BFS priority). Power iteration as pure
-    DataFrame algebra: per-round contributions = one shuffle on src +
-    one on dst; dangling mass is re-injected uniformly so ranks sum to
-    exactly 1 every round. Same persistence discipline as
-    dup_clusters_df — each round fully materialized, previous round
-    evicted, lineage one round deep (checkpoint to a catalog table at
-    10^10 edges)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = (e.select(F.col("src").alias("id"))
-             .unionByName(e.select(F.col("dst").alias("id")))
-             .distinct().persist())
+    """Distributed PageRank over an edge list → (id, rank, n_out, n_in):
+    each node's rank (summing to exactly 1) and its count of distinct
+    out- and in-edges. It is the crawl frontier-prioritization signal
+    (authority-ordered fetch queues are the classic upgrade over BFS
+    priority). Power iteration as pure DataFrame algebra: per-round
+    contributions = one shuffle on src + one on dst; dangling mass
+    (n_out = 0) is re-injected uniformly.
+
+    The input is planned once: the distinct edge frame lands first, the
+    node frame (ids with both degrees) is built from that landed frame
+    and lands next, and every iteration joins the landed edges with the
+    landed ranks, which carry n_out. ``localCheckpoint`` is the one
+    lineage cutter; no frame is cached, so no plan nests one cache in
+    another or re-plans the caller's edge view (for the crawl, a
+    crawl_log explode joined with url_map)."""
+    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .distinct().localCheckpoint(eager=True))
+    one, zero = F.lit(1), F.lit(0)
+    nodes = (
+        e.select(F.col("src").alias("id"), one.alias("o"), zero.alias("i"))
+        .unionByName(e.select(F.col("dst").alias("id"), zero.alias("o"), one.alias("i")))
+        .groupBy("id").agg(F.sum("o").alias("n_out"), F.sum("i").alias("n_in"))
+        .localCheckpoint(eager=True)
+    )
     n = nodes.count()
     if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # out-degree rides on the node frame; dangling nodes have deg null
-    base = nodes.join(deg.withColumnRenamed("src", "id"), "id", "left").persist()
-    base.count()
-    nodes.unpersist()
-    ranks = base.select("id", F.lit(1.0 / n).alias("rank"))
+        return nodes.select("id", F.lit(0.0).alias("rank"), "n_out", "n_in")
+    ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"), "n_out", "n_in")
     for _ in range(iters):
-        r = base.join(ranks, "id")
         contribs = (
-            e.join(r.filter(F.col("deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            (F.col("rank") / F.col("deg")).alias("c")), "src")
-            .groupBy("dst").agg(F.sum("c").alias("contrib"))
+            e.join(ranks.filter(F.col("n_out") > 0)
+                   .select(F.col("id").alias("src"),
+                           (F.col("rank") / F.col("n_out")).alias("c")), "src")
+            .groupBy(F.col("dst").alias("id")).agg(F.sum("c").alias("contrib"))
         )
-        dangling = r.filter(F.col("deg").isNull()).agg(
+        dangling = ranks.filter(F.col("n_out") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0))).first()[0]
         new_ranks = (
-            base.select("id")
-            .join(contribs.withColumnRenamed("dst", "id"), "id", "left")
+            ranks.join(contribs, "id", "left")
             .select("id",
                     (F.lit((1.0 - damping) / n)
                      + F.lit(damping) * (F.coalesce("contrib", F.lit(0.0))
-                                         + F.lit(dangling / n))).alias("rank"))
+                                         + F.lit(dangling / n))).alias("rank"),
+                    "n_out", "n_in")
         )
-        # TRUNCATE LINEAGE each round: `ranks` appears twice per
-        # iteration (contribs + dangling), so without truncation the
+        # TRUNCATE LINEAGE each round: `ranks` appears twice in
+        # new_ranks (its left side + contribs), so without truncation the
         # LOGICAL plan doubles every round and Catalyst analysis goes
-        # exponential even though execution hits the cache (measured:
-        # 9s at iters=6 → 166s at iters=12 with persist alone).
-        # localCheckpoint materializes eagerly and re-roots the plan at
-        # the stored partitions — plan depth stays constant. On a real
-        # cluster with lineage-based recovery concerns, swap for
-        # reliable checkpoint() into the job's checkpoint dir or a
-        # catalog table (same loop shape, crawl-superstep discipline).
+        # exponential (measured: 9s at iters=6 → 166s at iters=12 with
+        # persist alone). localCheckpoint materializes eagerly and
+        # re-roots the plan at the stored partitions — plan depth stays
+        # constant. On a real cluster with lineage-based recovery
+        # concerns, swap for reliable checkpoint() into the job's
+        # checkpoint dir or a catalog table (same loop shape,
+        # crawl-superstep discipline).
         ranks = new_ranks.localCheckpoint(eager=True)
-    base.unpersist()
     return ranks
 
 
@@ -1230,6 +1234,10 @@ def segment_word(word: str, vocab=SUBWORD_VOCAB) -> list[str]:
     return out
 
 
+# occurrence count above which a word's lexicon row broadcasts
+_HOT_WORD_OCC = 1_000_000
+
+
 def subword_tokenize_df(d: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text") -> DataFrame:
     """T31: subword-tokenize a corpus, returning per-doc stats:
@@ -1241,7 +1249,11 @@ def subword_tokenize_df(d: DataFrame, id_col: str = "doc_id",
     while occurrences grow linearly, so the Python stage is a
     vanishing fraction of the work; everything corpus-sized (explode,
     join, per-doc aggregation) stays JVM-side with map-side combine.
-    The (word -> pieces) table is the small side and broadcasts."""
+    The (word -> pieces) lexicon has one row per distinct word, so only
+    its head broadcasts: words with more than _HOT_WORD_OCC occurrences,
+    at most total_occurrences / _HOT_WORD_OCC of them (the counting
+    bound of dup_spans_df's hot tier). The tail shuffle-joins on the
+    word, each key carrying at most _HOT_WORD_OCC (doc, word) rows."""
     words = (
         d.select(F.col(id_col).alias("doc_id"),
                  F.explode(F.split(F.lower(F.regexp_replace(
@@ -1249,7 +1261,7 @@ def subword_tokenize_df(d: DataFrame, id_col: str = "doc_id",
         .filter(F.col("w") != "")
     )
     occ = words.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
-    distinct_words = occ.select("w").distinct()
+    n_occ = occ.groupBy("w").agg(F.sum("c").alias("n_occ"))
 
     @F.pandas_udf(T.StructType([
         T.StructField("n_pieces", T.IntegerType()),
@@ -1262,12 +1274,19 @@ def subword_tokenize_df(d: DataFrame, id_col: str = "doc_id",
             "n_unk": [sum(1 for x in p if x == "[unk]") for p in pieces],
         })
 
-    lex = distinct_words.withColumn("st", seg_stats("w")).select(
-        "w", F.col("st.n_pieces").alias("n_pieces"),
-        F.col("st.n_unk").alias("n_unk"), F.length("w").alias("wlen"))
+    def lex(ws: DataFrame) -> DataFrame:
+        return ws.withColumn("st", seg_stats("w")).select(
+            "w", F.col("st.n_pieces").alias("n_pieces"),
+            F.col("st.n_unk").alias("n_unk"), F.length("w").alias("wlen"))
+
+    hot = n_occ.filter(F.col("n_occ") > _HOT_WORD_OCC).select("w")
+    tail = lex(n_occ.filter(F.col("n_occ") <= _HOT_WORD_OCC).select("w"))
+    # hot words resolve map-side against a broadcast lexicon; a broadcast
+    # ANTI keeps them out of the exchange of the tail's shuffle join
+    hits = occ.join(F.broadcast(lex(hot)), "w").unionByName(
+        occ.join(F.broadcast(hot), "w", "left_anti").join(tail, "w"))
     return (
-        occ.join(F.broadcast(lex), "w")
-        .groupBy("doc_id")
+        hits.groupBy("doc_id")
         .agg(F.sum("c").alias("n_words"),
              F.sum(F.col("c") * F.col("n_pieces")).alias("n_subwords"),
              F.sum(F.col("c") * F.col("n_unk")).alias("n_unk"),

@@ -161,19 +161,17 @@ def host_authority(cat, url_map: DataFrame, n_corpus: int,
     """Host-level PageRank over the crawl's link graph — the authority
     signal a production frontier uses to order fetches beyond BFS
     priority (rank a host by who links to it, not when it was found).
-    Output: (host, rank, n_in, n_out), rank summing to 1."""
+    Output: (host, rank, n_in, n_out), rank summing to 1; n_out / n_in
+    count the distinct cross-host links from / to the host. A pure read
+    of committed tables: pagerank_df lands the host edge list once and
+    reports both degrees from it."""
     from web_crawler_spark.plans.pipeline_ops import pagerank_df
 
     edges = (link_edges(cat, url_map, n_corpus)
              .filter(F.col("src_host") != F.col("dst_host"))
              .select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst")))
-    pr = pagerank_df(edges, iters=iters, damping=damping)
-    n_out = edges.distinct().groupBy("src").agg(F.count("*").alias("n_out"))
-    n_in = edges.distinct().groupBy("dst").agg(F.count("*").alias("n_in"))
     return (
-        pr.withColumnRenamed("id", "host")
-        .join(n_out.withColumnRenamed("src", "host"), "host", "left")
-        .join(n_in.withColumnRenamed("dst", "host"), "host", "left")
-        .fillna(0, ["n_in", "n_out"])
+        pagerank_df(edges, iters=iters, damping=damping)
+        .select(F.col("id").alias("host"), "rank", "n_in", "n_out")
         .orderBy(F.desc("rank"), "host")
     )
