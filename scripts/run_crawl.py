@@ -5,9 +5,9 @@ Usage:
     spark-submit --py-files wcs.zip scripts/run_crawl.py \
         --fixtures <dir> --run-dir <dir> [--max-rounds N] [--per-host-k K]
 
-In the sandbox, scripts/submit.sh packages the repo and smoke-tests this
-in local mode; on a real cluster add --master/--num-executors and an
-Iceberg catalog via --packages.
+scripts/submit.sh packages the repo and smoke-tests this in local mode;
+on a real cluster add --master/--num-executors. The engine keeps its
+tables in ManifestCatalog under --run-dir, so no extra package is needed.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 # Package the engine and launch the crawl via spark-submit --py-files
 # (north_rule deployment path). Local-mode smoke test by default; on a
 # real cluster pass e.g.:
-#   MASTER=yarn EXTRA="--num-executors 128 --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.8.0"
+#   MASTER=yarn EXTRA="--num-executors 128"
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

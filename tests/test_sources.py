@@ -1,5 +1,6 @@
 """Custom source surface: the fakeweb Python DataSource (the engine's
-pluggable fetch boundary) and the IcebergCatalog config gate."""
+pluggable fetch boundary), the IcebergCatalog config gate, and
+ManifestCatalog time travel across eviction."""
 
 import pytest
 

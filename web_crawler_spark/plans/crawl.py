@@ -764,8 +764,9 @@ class CrawlEngine:
         cfg = self.cfg
         if cfg.compact_every and (r + 1) % cfg.compact_every == 0:
             did = False
-            for name in list(self.cat.manifest["appends"]):
-                if len(self.cat.parts(name)) >= cfg.compact_min_parts:
+            for name in self.cat.table_schemas:
+                parts = self.cat.parts(name)  # empty for stage-based tables
+                if parts and len(parts) >= cfg.compact_min_parts:
                     # toy scale: one part; a cluster passes a partition
                     # count sized to the Iceberg target file size
                     self.cat.compact(name, partitions=1)

@@ -16,9 +16,32 @@ so this catalog provides the same semantics over parquet directories:
   the round commits — the superstep's durable barrier, so no plan ever
   stacks one persisted frame on another.
 
-On a real cluster the same interface is backed by Iceberg
-(``writeTo(...).append()`` / snapshot-id pinned reads) — the engine code
-only talks to this interface.
+Each method is the local twin of an Iceberg operation:
+
+=============================  ==============================================
+method                         Iceberg twin
+=============================  ==============================================
+``read``                       ``spark.table`` pinned to the current snapshot
+``read_at``                    ``VERSION AS OF <snapshot>``
+``read_part``                  a scan of one snapshot's added data files
+``read_changes``               incremental-append scan
+``rounds`` / ``history``       the ``.snapshots`` metadata table
+``exists``                     ``spark.catalog.tableExists``
+``counters`` / ``round``       the snapshot summary of the last commit
+``staged_rowcount``            the snapshot summary's ``total-records``
+``stage`` / ``stage_local``    ``writeTo().createOrReplace()``
+``append`` / ``append_local``  ``writeTo().append()``
+``replace`` / ``compact``      overwrite / ``rewrite_data_files``
+``merge``                      ``MERGE INTO`` (copy-on-write)
+``alter_add_columns``          ``ALTER TABLE ... ADD COLUMN``
+``parts``                      the ``.files`` metadata table
+``expire_snapshots``           ``expire_snapshots`` + ``remove_orphan_files``
+``commit``                     every table's snapshot id pinned per round
+=============================  ==============================================
+
+``scratch`` / ``discard_scratch`` have no twin: a scratch part is not a
+table. The engine, the reports and the benchmark construct only this
+catalog.
 """
 
 from __future__ import annotations
@@ -127,18 +150,13 @@ class ManifestCatalog:
                 "(replace/compaction) — incremental read unavailable")
         delta = [v for v in new if v not in set(old)]
         schema = self._schema_for(name, target, live=to_round is None)
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
         if not delta:
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
             if not new:
                 raise KeyError(f"table {name!r} has no append parts in either snapshot")
-            return reader.parquet(
-                os.path.join(self.tables_dir, name, f"v{new[0]}")).limit(0)
-        return reader.parquet(*(
-            os.path.join(self.tables_dir, name, f"v{v}") for v in delta))
+            return self._scan(name, [new[0]], schema).limit(0)
+        return self._scan(name, delta, schema)
 
     def history(self) -> list[dict]:
         """Snapshot log (Iceberg `.snapshots` metadata table): one entry
@@ -166,16 +184,21 @@ class ManifestCatalog:
 
     def _read_from_manifest(self, name: str, manifest: dict,
                             live: bool = True) -> DataFrame:
-        schema = self._schema_for(name, manifest, live)
+        vs = (manifest["appends"][name] if name in manifest["appends"]
+              else [manifest["versions"][name]])
+        return self._scan(name, vs, self._schema_for(name, manifest, live))
+
+    def _scan(self, name: str, versions, schema) -> DataFrame:
+        """One flat parquet scan of the given versions or parts of
+        ``name``, bound to ``schema`` when there is one — a declared
+        schema skips parquet-footer inference."""
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        if name in manifest["appends"]:
-            parts = [os.path.join(self.tables_dir, name, f"v{v}")
-                     for v in manifest["appends"][name]]
-            return reader.parquet(*parts)
-        v = manifest["versions"][name]
-        return reader.parquet(os.path.join(self.tables_dir, name, f"v{v}"))
+        return reader.parquet(*(self._path(name, v) for v in versions))
+
+    def _path(self, name: str, v: int) -> str:
+        return os.path.join(self.tables_dir, name, f"v{v}")
 
     def counters(self) -> dict:
         return dict(self.manifest["counters"])
@@ -187,16 +210,12 @@ class ManifestCatalog:
         v = self._staged.get(name, self.manifest["versions"].get(name))
         if v is None:
             raise KeyError(f"table {name!r} has no staged or committed version")
-        return _footer_rows(os.path.join(self.tables_dir, name, f"v{v}"))
+        return _footer_rows(self._path(name, v))
 
     def read_part(self, name: str, v: int) -> DataFrame:
         """One version or part of ``name`` as written, committed or not —
         a flat scan of the files a write of this round just landed."""
-        reader = self.spark.read
-        schema = self.table_schemas.get(name)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(os.path.join(self.tables_dir, name, f"v{v}"))
+        return self._scan(name, [v], self.table_schemas.get(name))
 
     @property
     def round(self) -> int:
@@ -267,14 +286,13 @@ class ManifestCatalog:
 
     def _write_df(self, name: str, v: int, df: DataFrame,
                   partitions: int | None) -> None:
-        path = os.path.join(self.tables_dir, name, f"v{v}")
         w = df.coalesce(partitions) if partitions else df
-        w.write.mode("overwrite").parquet(path)
+        w.write.mode("overwrite").parquet(self._path(name, v))
 
     def _write_local(self, name: str, v: int, table) -> None:
         import pyarrow.parquet as pq
 
-        path = os.path.join(self.tables_dir, name, f"v{v}")
+        path = self._path(name, v)
         os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 

@@ -1,28 +1,22 @@
-"""IcebergCatalog — the real-cluster twin of ManifestCatalog.
+"""IcebergCatalog — Iceberg-backed round bookkeeping, not wired to the engine.
 
-The engine only talks to the catalog interface (read / stage / append /
-commit / counters / staged_rowcount); ManifestCatalog backs it with
-parquet dirs + manifest.json in this sandbox (no Iceberg jar, no
-network — SURVEY.md §7.3), and this class backs it with Iceberg tables
-on a cluster launched as:
+It has 8 of the 17 catalog methods the engine calls (exists, read,
+counters, round, staged_rowcount, stage, append, commit) and lacks the
+other nine (stage_local, append_local, read_part, replace, scratch,
+discard_scratch, parts, compact, expire_snapshots). The engine, the
+reports and the benchmark therefore construct only ManifestCatalog,
+whose module docstring maps each of its methods to its Iceberg twin.
+
+Constructing this class needs the Iceberg runtime on the classpath:
 
     spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<v> \
       --conf spark.sql.catalog.wcs=org.apache.iceberg.spark.SparkCatalog \
       --conf spark.sql.catalog.wcs.type=hadoop \
       --conf spark.sql.catalog.wcs.warehouse=<path> ...
 
-Semantic mapping (same guarantees the engine relies on):
-  stage(name, df)    -> createOrReplace() on <ns>.<name>   (new snapshot)
-  append(name, df)   -> writeTo(...).append()              (no rewrite)
-  commit(r, ctrs)    -> snapshot ids of every table + counters recorded
-                        in <ns>.rounds; readers pin VERSION AS OF these
-  read(name)         -> snapshot-pinned read of the last committed round
-  staged_rowcount    -> snapshot summary total-records (manifest-only)
-
-Import/usage is gated: constructing it without the Iceberg runtime on
-the classpath raises immediately with the config above in the message.
-Unit-testable logic (round bookkeeping SQL strings) is pure; the Spark
-calls are exercised only on a real cluster.
+Without it the constructor raises, with the config above in the message.
+The round-bookkeeping SQL strings are pure builders, tested against
+DuckDB stand-ins; the Spark calls never run without the jar.
 """
 
 from __future__ import annotations
