@@ -1,11 +1,11 @@
-"""CI-lite twins of the bench.py stress harnesses (VERDICT r3 #10):
-drive --frontier/--seen/--pack at small n in a subprocess and assert the
+"""CI-lite twins of the tools/stress.py probes: drive --frontier,
+--seen, --pack and --spans at small n in a subprocess and assert the
 JSON contract, so the extracted schedule_batch / filter_new_urls /
-pack_sequences_df stress paths cannot drift from the harness that
-produces the BENCH/FRONTIER.md evidence. The stress functions own their
-SparkSession, hence subprocesses. Internal invariants (exact==routed
-row sets, token conservation) are hard asserts inside bench.py itself —
-rc=0 means they held."""
+pack_sequences_df / dup_spans_df stress paths cannot drift from the
+probes that produce the BENCH/FRONTIER.md evidence. The stress functions
+own their SparkSession, hence subprocesses. Internal invariants
+(exact==routed row sets, token conservation, planted-span recall) are
+hard asserts inside tools/stress.py itself — rc=0 means they held."""
 
 import json
 import os
@@ -19,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _run(args, timeout=240):
     out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py"), *args],
+        [sys.executable, os.path.join(REPO, "tools", "stress.py"), *args],
         capture_output=True, text=True, cwd=REPO, timeout=timeout,
     )
     assert out.returncode == 0, out.stderr[-2000:]
@@ -47,7 +47,7 @@ def test_frontier_stress_small_n():
 def test_seen_stress_small_n(sketch):
     j = _run(["--seen", "--rows", "40000", "--seen-n", "4000",
               "--cores", "8", "--sketch", sketch])
-    # exact == routed is asserted inside bench.py; here check the shape
+    # exact == routed is asserted inside tools/stress.py; here check the shape
     assert j["sketch"] == sketch
     assert j["new"] == j["candidates"] - j["seen"]
     # the sketch must actually route most rows around the anti-join
@@ -57,7 +57,7 @@ def test_seen_stress_small_n(sketch):
 @pytest.mark.stress_lite
 def test_pack_stress_small_n():
     j = _run(["--pack", "--rows", "50000", "--ctx", "2048", "--cores", "8"])
-    # token conservation is a hard assert inside bench.py
+    # token conservation is a hard assert inside tools/stress.py
     assert j["docs"] == 50000
     assert j["segments"] >= j["docs"] * 0  # parses; segments reported
     assert j["tokens"] > 0 and j["tokens_per_sec"] > 0
@@ -66,7 +66,7 @@ def test_pack_stress_small_n():
 @pytest.mark.stress_lite
 def test_spans_stress_small_n():
     j = _run(["--spans", "--rows", "20000", "--cores", "8"], timeout=360)
-    # recall floor + precision ceiling are hard asserts inside bench.py
+    # recall floor + precision ceiling are hard asserts inside tools/stress.py
     assert j["docs"] == 20000
     boiler = (20000 + 16) // 17
     copies = (20000 - 50 + 99) // 100

@@ -1,5 +1,5 @@
 """Direct contract tests for plans.crawl.schedule_batch — the frontier
-superstep the engine schedules every round with (and bench.py --frontier
+superstep the engine schedules every round with (and tools/stress.py --frontier
 stresses at 10^8 rows). The crawl-oracle suite proves it end-to-end;
 these pin the standalone contract on a synthetic frontier."""
 

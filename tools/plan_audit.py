@@ -230,12 +230,14 @@ def main() -> int:
               "column is referenced), so operator timings use a noop-sink write,",
               "never count.", "",
               "## T28 hot-gram skew — round-5 fix, measured", "",
-              "`bench.py --spans-hot` plants ONE k-token boilerplate run in every",
-              "doc (a single gram key, df = 10^7) and runs the identical corpus",
-              "through the old `count(*) OVER (PARTITION BY g)` twin and the",
-              "production two-tier join-back, interleaved, 512 reducers,",
-              "AQE coalescing off (a cluster-like reducer count — local",
-              "coalescing to ~38 fat partitions hides any hot key):",
+              "A historical measurement from round 5; the one-off probe that",
+              "took it was retired with the window shape it compared against.",
+              "It planted ONE k-token boilerplate run in every doc (a single",
+              "gram key, df = 10^7) and ran the identical corpus through the old",
+              "`count(*) OVER (PARTITION BY g)` twin and the production two-tier",
+              "join-back, interleaved, 512 reducers, AQE coalescing off (a",
+              "cluster-like reducer count — local coalescing to ~38 fat",
+              "partitions hides any hot key):",
               "", "| shape | wall | worst task | stage median | skew |", "|---|---|---|---|---|",
               "| window twin | 52.4 s | **17.9 s** (the hot-gram sort) | 0.45 s | 40x |",
               "| two-tier join-back | 53.7 s | **1.0 s** | 0.09 s | — |",

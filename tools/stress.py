@@ -1,13 +1,13 @@
-"""Benchmark harness (driver contract + scaling evidence).
+"""Stress and scaling probes for the engine's distributed paths.
+
+The benchmark is ``perfbench/`` (BENCHMARK.json): it times the crawl
+engine and the driver queries and checks every answer against the
+oracle or DuckDB. These probes cover what it does not: single paths at
+10^8-row stress scale, and the N -> 4N scaling evidence. Each mode
+prints one JSON line; run as ``python tools/stress.py <mode>``.
 
 Modes
 -----
-default            : time the headline queries at $SPARK_GRAFT_SF_DIR
-                     (default /root/testdata/sf0.1) on
-                     local[$SPARK_GRAFT_CPUS], plus crawl-engine
-                     throughput on a deterministic bench fixture; print
-                     ONE JSON line {"metric", "value", "unit", "queries",
-                     "sf", ...}.
 --scale-job --cores N : run ONE compute-heavy crawl-shaped superstep
                      (URL canon → salted bucket → image decode/pHash/
                      PSNR → MinHash bands → dedup agg) at local[N] and
@@ -15,8 +15,8 @@ default            : time the headline queries at $SPARK_GRAFT_SF_DIR
                      same job, same input, two parallelism levels.
 --scaling          : run --scale-job at local[8] and local[32] in fresh
                      subprocesses (a JVM cannot change master), compute
-                     scaling efficiency = T8/(4*T32) per the session
-                     brief / BASELINE.json north_rule (>= 0.8 target),
+                     scaling efficiency = T8/(4*T32) per
+                     BASELINE.json's north_rule (>= 0.8 target),
                      and write BENCH/BASELINE.md.
 
 --frontier         : drive the engine's schedule_batch over a synthetic
@@ -33,15 +33,6 @@ default            : time the headline queries at $SPARK_GRAFT_SF_DIR
                      JVM-generated corpus with planted copies and
                      boilerplate runs; recall floor AND precision
                      ceiling asserted distributed.
---spans-hot        : T28 straggler A/B — ONE k-token boilerplate run
-                     (a single hot gram key, df in the millions) planted
-                     in half the docs; the old count-OVER-gram window
-                     twin vs the production groupBy+semi-join, per-stage
-                     max/median task-duration ratios scraped from the
-                     UI REST API (BENCH/PLANS.md skew section).
---soak [--xlarge]  : the same BSP crawl loop at growing per-round batch
-                     sizes — fixed-cost amortization evidence
-                     (BENCH/SOAK.md).
 
 Everything is deterministic (seeded); no wall-clock enters any result,
 only the measurement timer.
@@ -51,12 +42,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 # One BLAS/OMP thread per python worker: with 32 concurrent workers an
@@ -67,207 +57,22 @@ for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS",
            "NUMEXPR_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def _sf_of(path: str) -> float:
-    base = os.path.basename(path.rstrip("/"))
-    try:
-        return float(base.replace("sf", ""))
-    except ValueError:
-        return -1.0
+def _partitions(rows: int, rows_per_part: int, cores: int,
+                cap: int = 256) -> int:
+    """Partitions for a synthetic ``spark.range`` input: one per
+    ``rows_per_part`` rows, at least one per core, at most ``cap``. Each
+    mode's divisor puts its default size exactly on the cap; a small run
+    gets a few full tasks instead of hundreds of near-empty Arrow-UDF
+    ones."""
+    return min(cap, max(rows // rows_per_part, cores))
 
 
-def _materialize(df) -> int:
-    """Full materialization without driver collect: noop sink + count."""
+def _materialize(df) -> None:
+    """Full materialization without driver collect: a noop-sink write."""
     df.write.format("noop").mode("overwrite").save()
-    return 1
-
-
-# --------------------------------------------------------------- headline
-
-# Representative slice of __spark_entry__.queries(): scan+agg, joins,
-# windows, set ops, and the training-data pipeline ops. Names match the
-# driver's queries() keys so BENCH_r{N}.json lines up with CORRECTNESS.
-HEADLINE = [
-    "pricing_summary",
-    "fetch_join",
-    "asof_join",
-    "topk_per_group",
-    "metrics_rollup",
-    "session_window",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ngram_jaccard",
-    "embedding_cosine_topk",
-    "dedup_embedding_cosine",
-    "range_join",
-    "ann_lsh",
-    "image_pipeline",
-]
-
-# Work-version per headline key: bumped whenever a key's DEFINITION of
-# work changes, so cross-round bench deltas separate "does more work"
-# from "got slower on the same work". v1 = the round-1..3 definition.
-# History:
-#   dedup_exact    v2 (r4): full T28 span-dedup doc profile over
-#                  documents + planted rows (was: trivial md5 groupBy).
-#   dedup_simhash  v2 (r4): adds the guaranteed-recall self-check gate.
-#   ann_lsh        v2 (r4): top-3 for ALL vectors via 24-table
-#                  hyperplane LSH + brute-force recall gate (was a
-#                  narrower single-table probe).
-#   corpus_clean   (not headlined) v2 (r4): + curriculum position,
-#                  v3 (r5): + shard manifest columns.
-WORK_VERSIONS = {
-    "dedup_exact": 2,
-    "dedup_simhash": 2,
-    "ann_lsh": 2,
-}
-
-
-def run_headline() -> None:
-    import __spark_entry__ as entrymod
-    from web_crawler_spark.session import get_spark
-
-    spark = get_spark(app="wcs-bench", cores=CPUS)
-    qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = qs[name]
-        fn(spark, SF_DIR).count()  # warm JIT/codegen + file listing once
-        # min of two timed runs: the hypervisor throttles granted cycles
-        # in multi-second bursts (r4 saw one stage go 4s -> 56s within a
-        # single session), so a single-shot timing is a lottery. The work
-        # is deterministic and identical across runs; min-of-2 applied
-        # uniformly to every key is the noise-robust estimator, same
-        # discipline as the crawl loop's best-of-2 retry.
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _materialize(fn(spark, SF_DIR))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-
-    crawl = crawl_throughput(spark)
-    timings["crawl_loop"] = crawl["elapsed_sec"]
-    total = round(sum(timings.values()), 3)
-    print(json.dumps({
-        "metric": "headline query+crawl wall time at sf (sec, lower=better); "
-                  "crawl throughput in .crawl",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "work_versions": {k: WORK_VERSIONS.get(k, 1)
-                          for k in timings if k != "crawl_loop"},
-        "sf": _sf_of(SF_DIR),
-        "cores": CPUS,
-        "crawl": crawl,
-    }))
-
-
-# ------------------------------------------------------- crawl throughput
-
-def crawl_throughput(spark, n: int = 5000, n_hosts: int = 60,
-                     per_host_k: int = 32, max_rounds: int = 10,
-                     retry_over: float = 80.0) -> dict:
-    """Full BSP crawl loop on a deterministic fixture; reports the
-    BASELINE.json metric pair: frontier URLs/sec (rows scheduled through
-    eligibility each round) + fetched-rows/sec. per_host_k=32 sizes the
-    per-round batch the way a production budget would (the BSP round has
-    a fixed ~10s driver+commit cost; amortize it over real batches)."""
-    from fixtures.gen import generate
-    from web_crawler_spark.config import CrawlConfig
-    from web_crawler_spark.plans.crawl import CrawlEngine
-
-    fix = f"/tmp/wcs_bench_fix_n{n}_s{n_hosts}_v2"
-    if not os.path.exists(os.path.join(fix, "corpus.parquet")):
-        generate(fix, n=n, n_hosts=n_hosts, n_seeds=n_hosts)
-    cfg = CrawlConfig(per_host_k=per_host_k, max_rounds=max_rounds)
-
-    def one_run(tag: str) -> dict:
-        run_dir = f"/tmp/wcs_bench_run_n{n}_k{per_host_k}_c{CPUS}_{tag}"
-        shutil.rmtree(run_dir, ignore_errors=True)
-        eng = CrawlEngine(spark, fix, run_dir, cfg)
-        t0 = time.perf_counter()
-        eng.init_state()
-        fetched_total, frontier_total = 0, 0
-        for r in range(cfg.max_rounds):
-            info = eng.run_round(r)
-            fetched_total += info["fetched"]
-            frontier_total += info["frontier"]
-            if info["stopped"]:
-                break
-        elapsed = time.perf_counter() - t0
-        return {
-            "elapsed_sec": round(elapsed, 3),
-            "rounds": eng.cat.round + 1,
-            "fetched_rows": fetched_total,
-            "fetched_rows_per_sec": round(fetched_total / elapsed, 1),
-            "frontier_urls_per_sec": round(frontier_total / elapsed, 1),
-        }
-
-    # the sandbox hypervisor throttles granted cycles in bursts (2-5x
-    # between runs — BENCH/BASELINE.md spin control); a single-shot
-    # timing is a lottery. If the first run looks throttled, run once
-    # more and report the better window (results are deterministic —
-    # both runs produce the identical crawl). The retry has no upper
-    # cutoff: a pathologically slow first run (r5 saw 263s against a
-    # 126s quiet-window twin, interleaved A/B) is MORE likely to be a
-    # throttle burst, not less — the old `< 2.5 * retry_over` ceiling
-    # skipped the retry exactly when it mattered most.
-    def one_run_caught(tag: str) -> dict:
-        # a crashed attempt must stay diagnosable from the BENCH artifact
-        # (type + first line), not evaporate into a truncated stderr tail
-        try:
-            return one_run(tag)
-        except Exception as ex:
-            first = str(ex).splitlines()[0][:300] if str(ex) else ""
-            return {"elapsed_sec": float("inf"), "rounds": 0, "fetched_rows": 0,
-                    "fetched_rows_per_sec": 0.0, "frontier_urls_per_sec": 0.0,
-                    "error": f"{type(ex).__name__}: {first}"}
-
-    best = one_run_caught("a")
-    if "error" in best or best["elapsed_sec"] > retry_over:
-        second = one_run_caught("b")
-        best["retried"] = True
-        second["retried"] = True
-        if "error" in best and "error" not in second:
-            second["first_attempt_error"] = best["error"]
-            best = second
-        elif second["elapsed_sec"] < best["elapsed_sec"]:
-            best = second
-    if best.get("elapsed_sec") == float("inf"):
-        best["elapsed_sec"] = -1.0  # keep the JSON line parseable
-    return best
-
-
-def run_soak() -> None:
-    """Amortization evidence: the BSP round has a fixed driver cost
-    (~5-8s locally), so fetched-rows/sec must GROW with per-round batch
-    size — this is the scale story for 10^10-frontier rounds where
-    batches are millions of rows. Runs the same loop at three batch
-    scales and prints one JSON line."""
-    from web_crawler_spark.session import get_spark
-
-    spark = get_spark(app="wcs-soak", cores=CPUS)
-    out = {}
-    tiers = [
-        ("small", 5000, 60, 32, 5),
-        ("medium", 20000, 400, 32, 5),
-        ("large", 60000, 2000, 64, 5),
-    ]
-    if "--xlarge" in sys.argv:
-        # ~8k-row rounds: fixture gen is ~50s/1.4GB, so opt-in
-        tiers.append(("xlarge", 200000, 4000, 128, 5))
-    for tag, n, hosts, k, rounds in tiers:
-        r = crawl_throughput(spark, n=n, n_hosts=hosts, per_host_k=k,
-                             max_rounds=rounds, retry_over=1e9)
-        r["batch_per_round"] = round(r["fetched_rows"] / max(r["rounds"], 1))
-        out[tag] = r
-    print(json.dumps({"metric": "crawl fetched-rows/sec vs per-round batch size",
-                      "soak": out, "cores": CPUS}))
 
 
 # ------------------------------------------------------- frontier stress
@@ -277,7 +82,7 @@ def run_frontier_stress(rows: int, hosts: int, k: int, cores: int) -> None:
     ``schedule_batch`` — the exact code ``run_round`` schedules with —
     over a synthetic deterministic frontier of ``rows`` URLs across
     ``hosts`` hosts and report frontier URLs/sec. The frontier is
-    generated distributed from ``spark.range`` (256 partitions, no
+    generated distributed from ``spark.range`` (256 partitions at 10^8, no
     fixture files, no driver materialization), with a heavy-tailed
     host-size distribution (hash-cubed mapping: the largest host holds
     ~(1/hosts)^(1/3) of all URLs) so the per-host top-k window sees the
@@ -302,7 +107,7 @@ def run_frontier_stress(rows: int, hosts: int, k: int, cores: int) -> None:
          / F.lit(1_000_000.0))
     host_id = F.floor(F.lit(float(hosts)) * u * u * u).cast("long")
     host = F.concat(F.lit("h"), host_id.cast("string"), F.lit(".example"))
-    frontier = spark.range(0, rows, 1, 256).select(
+    frontier = spark.range(0, rows, 1, _partitions(rows, 390_625, cores)).select(
         F.concat(F.lit("http://"), host, F.lit("/p/"),
                  F.col("id").cast("string")).alias("canon_url"),
         F.xxhash64(F.concat(F.lit("http://"), host, F.lit("/p/"),
@@ -381,9 +186,10 @@ def run_seen_stress(rows: int, seen_n: int, cores: int,
     stride = max(rows // seen_n, 1)
     url = F.concat(F.lit("http://h"), (F.pmod(F.col("id"), F.lit(9973))).cast("string"),
                    F.lit(".example/p/"), F.col("id").cast("string"))
-    cand = spark.range(0, rows, 1, 256).select(
+    cand = spark.range(0, rows, 1, _partitions(rows, 390_625, cores)).select(
         F.xxhash64(url).alias("url_hash"), url.alias("canon_url"))
-    seen = spark.range(0, rows, stride, 64).select(
+    seen = spark.range(0, rows, stride,
+                       _partitions(seen_n, 156_250, cores, cap=64)).select(
         F.xxhash64(url).alias("url_hash"), url.alias("canon_url"))
 
     t0 = time.perf_counter()
@@ -444,7 +250,7 @@ def run_pack_stress(rows: int, ctx_len: int, cores: int) -> None:
 
     spark = get_spark(app="wcs-pack", cores=cores,
                       shuffle_partitions=max(cores * 4, 32))
-    docs = spark.range(0, rows, 1, 256).select(
+    docs = spark.range(0, rows, 1, _partitions(rows, 390_625, cores)).select(
         F.col("id").alias("doc_id"),
         (F.lit(50) + F.pmod(F.xxhash64("id"), F.lit(300))).alias("n_tok"))
     segs = pack_sequences_df(docs, ctx_len,
@@ -494,7 +300,7 @@ def run_spans_stress(rows: int, cores: int) -> None:
     # copy pairs: ids ≡ 50 (mod 100) generate from id-50 (≡ 0 mod 100,
     # which is never remapped itself — a naive `every 50th copies id-50`
     # chains remappings and produces no duplicate text at all)
-    base = spark.range(0, rows, 1, 256).select(
+    base = spark.range(0, rows, 1, _partitions(rows, 7_800, cores)).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 100 == 50, F.col("id") - 50)
         .otherwise(F.col("id")).alias("gen_id"),
@@ -540,142 +346,6 @@ def run_spans_stress(rows: int, cores: int) -> None:
         "dup_tokens": int(agg["dup_tokens"]),
         "elapsed_sec": wall, "docs_per_sec": round(rows / wall, 1),
         "approx_tokens_per_sec": round(tokens / wall, 1),
-    }))
-
-
-# ------------------------------------------------- spans hot-gram skew
-
-def run_spans_hot(rows: int, cores: int, hot_every: int = 2,
-                  hot_len: int = 8) -> None:
-    """T28 skew evidence (round-5 fix): ONE k-token boilerplate run
-    planted in every `hot_every`-th doc, so a single k-gram KEY
-    carries rows/hot_every occurrences — the license-header/navbar shape this
-    operator exists to find, and the exact key that used to funnel into
-    ONE window task (`count(*) OVER (PARTITION BY g)` has no partial
-    aggregation and AQE cannot split a window partition).
-
-    Runs the SAME hot corpus through BOTH shapes, interleaved in one
-    session (sandbox CPU noise discipline):
-      - `window`  — the old count-OVER-gram twin (local here, for A/B);
-      - `tiered`  — the production dup_spans_df (groupBy(g).count with
-        map-side combine; df>hot_df grams broadcast-SEMI so hot
-        positions never shuffle on g; bounded-df rest via shuffle SEMI
-        behind a broadcast ANTI).
-    AQE is NOT the safety net here and the probe proves why: with the
-    un-tiered join-back, AQE broadcast the tiny dup set at runtime but
-    the already-materialized position exchange was read 1:1 — a 10M-row
-    hot partition in ONE task (10.7 s vs 0.45 s median, measured) —
-    and the skew splitter rewrites only join stages, never a plain
-    skewed read.
-    The UI REST API is scraped for per-stage task-duration quantiles;
-    each shape reports its worst max/median task-duration ratio over
-    stages with >= 8 tasks. The groupby shape must show no straggler
-    (worst ratio bounded); the window twin's hot stage is expected to
-    blow through it — the JSON shows both so the contrast is measured,
-    not asserted from theory."""
-    import urllib.request
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from web_crawler_spark.plans.pipeline_ops import dup_spans_df
-    from web_crawler_spark.session import get_spark
-
-    # reducer count sized the way a 1000-executor cluster's would be
-    # (thousands of shuffle partitions), with AQE partition coalescing
-    # OFF for this probe: coalescing to ~38 fat local partitions makes
-    # every partition ~the hot key's size and hides the straggler that
-    # a real cluster would see (one hot key pins ONE of 10^4 reducers
-    # while the rest finish in ms). Skew-JOIN splitting stays ON — that
-    # is the mechanism under test for the join-back shape.
-    spark = get_spark(app="wcs-spans-hot", cores=cores,
-                      shuffle_partitions=512,
-                      extra={"spark.ui.enabled": "true",
-                             "spark.sql.adaptive.coalescePartitions.enabled":
-                             "false"})
-    k = 8
-    # skew concentrates on ONE gram KEY, so the hot run is exactly k
-    # tokens (hot_len=k -> a single hot k-gram) and its df = the number
-    # of planted docs (rows/hot_every, millions). A LONGER run would
-    # spread df over hot_len-k+1 DISTINCT gram keys that hash to
-    # different partitions — no straggler at all (measured: flat). The
-    # base body is kept short (11-13 tokens) so the hot key dominates
-    # total gram volume the way a license header dominates a crawl.
-    hot_run = " ".join(f"hot{i}" for i in range(hot_len))
-    body = F.expr(
-        "concat_ws(' ', transform(sequence(0, 10 + cast(doc_id % 3 as int)),"
-        " j -> concat('w', pmod(xxhash64(doc_id * 4096 + j), 50021))))")
-    docs = spark.range(0, rows, 1, 128).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % hot_every == 0,
-               F.concat(F.lit(hot_run), F.lit(" "), body))
-        .otherwise(body).alias("text"),
-    )
-
-    def window_twin(d):
-        # the pre-round-5 shape, kept ONLY as the A/B straggler exhibit
-        toks = F.expr(
-            "filter(split(lower(regexp_replace(text, '[^a-z0-9]+', ' ')), ' '),"
-            " x -> x <> '')")
-        t = (d.select("doc_id", toks.alias("t"))
-             .withColumn("n_tokens", F.size("t"))
-             .filter(F.col("n_tokens") >= k))
-        g = (t.select("doc_id", "t",
-                      F.explode(F.expr(f"sequence(0, n_tokens - {k})")).alias("pos"))
-             .select("doc_id", "pos",
-                     F.expr(f"md5(concat_ws(' ', slice(t, pos + 1, {k})))").alias("g")))
-        return (g.withColumn("_df", F.count("*").over(W.partitionBy("g")))
-                .filter(F.col("_df") > 1)
-                .groupBy("doc_id").agg(F.count("*").alias("n_hits")))
-
-    seen_stage_ids: set = set()
-
-    def task_skew() -> dict:
-        # worst max/median task duration over completed stages with
-        # >= 8 tasks, from the UI REST API (quantile endpoint). Only
-        # stages NEW since the last call count, so each shape's scrape
-        # covers exactly its own jobs.
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        stages = json.loads(urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=30).read())
-        worst = {"ratio": 0.0, "stage": None, "max_ms": 0, "med_ms": 0}
-        for s in stages:
-            if s["stageId"] in seen_stage_ids:
-                continue
-            seen_stage_ids.add(s["stageId"])
-            if s.get("numCompleteTasks", 0) < 8:
-                continue
-            q = json.loads(urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages/{s['stageId']}/"
-                f"{s['attemptId']}/taskSummary?quantiles=0.5,1.0",
-                timeout=30).read())
-            med, mx = q["executorRunTime"]
-            if med <= 0:
-                med = 1.0
-            ratio = mx / med
-            if mx >= 500 and ratio > worst["ratio"]:  # ignore trivial stages
-                worst = {"ratio": round(ratio, 2), "stage": s["stageId"],
-                         "max_ms": int(mx), "med_ms": int(med)}
-        return worst
-
-    results = {}
-    for name, frame in (("window", window_twin(docs)),
-                        ("tiered", dup_spans_df(docs, k=k))):
-        t0 = time.perf_counter()
-        _materialize(frame)
-        wall = round(time.perf_counter() - t0, 3)
-        results[name] = {"elapsed_sec": wall, "worst_task_skew": task_skew()}
-    hot_docs = (rows + hot_every - 1) // hot_every  # ids ≡ 0 (mod hot_every)
-    agg = dup_spans_df(docs, k=k).agg(
-        F.countDistinct("doc_id").alias("docs_hit")).first()
-    assert agg["docs_hit"] >= hot_docs - 1, (agg["docs_hit"], hot_docs)
-    print(json.dumps({
-        "metric": "T28 hot-gram (one gram key, df=rows/hot_every) straggler A/B: "
-                  "old window shape vs production two-tier join-back",
-        "docs": rows, "hot_docs": hot_docs, "cores": cores,
-        "shapes": results,
     }))
 
 
@@ -756,7 +426,7 @@ def run_scale_job(cores: int, rows: int) -> None:
 
     chain(2048).count()  # warm python workers / codegen / page cache
     best = float("inf")
-    for _rep in range(int(os.environ.get("WCS_SCALE_REPEATS", "2"))):
+    for _rep in range(2):
         t0 = time.perf_counter()
         n_buckets = chain(rows).count()
         best = min(best, time.perf_counter() - t0)
@@ -911,10 +581,7 @@ across windows; raw efficiency per attempt is tabled for transparency.
 |---|---|---|---|
 {attempts_md}
 
-Command: `python bench.py --scaling --rows {rows} --lo {n_lo} --hi {n_hi}`.
-Crawl-loop throughput (full BSP loop to frontier exhaustion) is
-reported per-round in `BENCH_r*.json` under `.crawl` by
-`python bench.py`.
+Command: `python tools/stress.py --scaling --rows {rows} --lo {n_lo} --hi {n_hi}`.
 
 ## Every protocol run (append-only ledger, BENCH/SCALING_HISTORY.md)
 
@@ -939,8 +606,6 @@ if __name__ == "__main__":
     elif "--scaling" in args:
         run_scaling(_flag("--rows", 1200000), attempts=_flag("--attempts", 2),
                     n_lo=_flag("--lo", 8), n_hi=_flag("--hi", 32))
-    elif "--soak" in args:
-        run_soak()
     elif "--frontier" in args:
         run_frontier_stress(_flag("--rows", 100_000_000),
                             _flag("--hosts", 1_000_000),
@@ -953,11 +618,7 @@ if __name__ == "__main__":
     elif "--pack" in args:
         run_pack_stress(_flag("--rows", 100_000_000),
                         _flag("--ctx", 2048), _flag("--cores", CPUS))
-    elif "--spans-hot" in args:
-        run_spans_hot(_flag("--rows", 8_000_000), _flag("--cores", CPUS),
-                      hot_every=_flag("--hot-every", 2),
-                      hot_len=_flag("--hot-len", 8))
     elif "--spans" in args:
         run_spans_stress(_flag("--rows", 2_000_000), _flag("--cores", CPUS))
     else:
-        run_headline()
+        sys.exit(__doc__)

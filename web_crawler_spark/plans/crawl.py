@@ -126,7 +126,7 @@ def schedule_batch(frontier, host_next, r: int, cfg: CrawlConfig, *,
     after the round's actions — it is cached so the count and
     row_number branches share one evaluation of the eligibility
     subplan). Used by ``CrawlEngine.run_round`` and, over a synthetic
-    10^8-row frontier, by ``bench.py --frontier`` — the stress evidence
+    10^8-row frontier, by ``tools/stress.py --frontier`` — the stress evidence
     for the north-rule frontier-URLs/sec metric runs this exact code.
 
     ``host_rank`` (cfg.priority_mode="authority"): a small (host,
@@ -192,7 +192,7 @@ def filter_new_urls(cand, seen_tbl, maybe_udf=None):
     (~|seen∩cand| + FPR·|cand|) pay the shuffle. The two branches are
     disjoint, so exactness is preserved. Used by
     ``CrawlEngine.run_round`` every round and stressed at 10^8
-    candidates by ``bench.py --seen`` (BENCH/FRONTIER.md)."""
+    candidates by ``tools/stress.py --seen`` (BENCH/FRONTIER.md)."""
     keys = ["url_hash", "canon_url"]
     if maybe_udf is None:
         return cand.join(seen_tbl, keys, "left_anti")

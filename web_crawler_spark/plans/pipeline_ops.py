@@ -964,7 +964,7 @@ def pack_sequences_df(docs: DataFrame, ctx_len: int,
 
     ``tok_col`` supplies a precomputed token count (skips the regexp
     over text — e.g. when token counts are already materialized, or in
-    bench.py --pack's synthetic stress). ``bucket_size`` must keep the
+    tools/stress.py --pack's synthetic stress). ``bucket_size`` must keep the
     BUCKET COUNT (n_docs / bucket_size) in the low thousands: the
     packed offset array's prefix pass is O(B²) inside one task, so at
     10^8+ docs size it as ~n_docs/2048, exactly like the crawl engine's
@@ -1043,7 +1043,7 @@ def dup_spans_df(docs: DataFrame, k: int = 8,
          partition is read by ONE task — AQE's skew splitter only
          rewrites join stages, never a plain skewed read (measured:
          10M-position hot key -> a 10.7 s straggler vs ~0.45 s median,
-         bench.py --spans-hot). And NOT a fused salted left-outer
+         in the hot-gram probe of BENCH/PLANS.md). And NOT a fused salted left-outer
          join either — measured 1.5-3x slower (left-preservation
          defeats Bloom pruning and widens the exchange). The gram key
          is xxhash64 (an 8-byte JVM hash, never leaves the operator)
